@@ -63,14 +63,6 @@ def decode_np(cell: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     return res, x, y
 
 
-def parent_np(cell: np.ndarray, steps: int = 1) -> np.ndarray:
-    res, x, y = decode_np(cell)
-    r2 = res - steps
-    if np.any(r2 < 0):
-        raise ValueError("parent below resolution 0")
-    return (r2 << _RES_SHIFT) | ((y >> steps) << r2) | (x >> steps)
-
-
 def cell_bounds_np(cell: np.ndarray
                    ) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """cell -> (lon_min, lat_min, lon_max, lat_max)."""

@@ -163,7 +163,14 @@ def _geoarrow_from_spark_arrow(a: pa.Array, extension: str,
     else:
         dims = {2: "xy", 4: "xyzm"}[nd]
     flat = np.asarray(cur.values, dtype=np.float64)
-    coords = flat.reshape(-1, nd)
+    if DEPTH[extension] == 0:
+        # a point holds one coord row per slot, but a NULL slot's list
+        # is empty here: scatter each slot from its own offset
+        coords = np.full((len(a), nd), np.nan)
+        has = widths == nd
+        coords[has] = flat[co[:-1][has, None] + np.arange(nd)]
+    else:
+        coords = flat.reshape(-1, nd)
     return garrow.GeoArrowArray(extension, dims=dims, length=len(a),
                                 validity=validity, offsets=offsets,
                                 coords=coords)

@@ -26,7 +26,7 @@ from pyspark.sql.functions import pandas_udf
 
 from ..kernels.geom import GEOM_TYPES, format_wkt, parse_wkt
 from ..kernels.ops import (geom_area, geom_centroid, geom_envelope,
-                           point_in_rings, polygon_batch_area_centroid)
+                           polygon_batch_area_centroid)
 from ..kernels.wkb import (parse_point_wkb_buffer, parse_polygon_wkb_buffer,
                            parse_wkb, points_to_wkb_buffer, write_wkb)
 
@@ -735,29 +735,6 @@ def st_length(c):
 def st_npoints(c):
     """Total coordinate count of a WKB geometry."""
     return _lazy_udfs()["st_npoints"](c)
-
-
-def make_st_contains(rings: list[np.ndarray]):
-    """Factory: fixed-polygon containment UDF (x, y) -> bool. The
-    polygon is captured in the closure (broadcast with the pickled UDF,
-    parsed once per executor) — reference-style 'lazy construction of
-    expensive components' (geoarrow_geos.c:782-800)."""
-    from pyspark.sql import types as T
-    rings = [np.asarray(r, dtype=np.float64) for r in rings]
-
-    @pandas_udf(T.BooleanType())
-    def st_contains_fixed(x: pd.Series, y: pd.Series) -> pd.Series:
-        xv = x.to_numpy(dtype=np.float64, na_value=np.nan)
-        yv = y.to_numpy(dtype=np.float64, na_value=np.nan)
-        return pd.Series(point_in_rings(xv, yv, rings))
-
-    return st_contains_fixed
-
-
-def register_udfs(spark) -> None:
-    """Expose the st_* surface to SQL (spark.udf.register)."""
-    for name, u in _lazy_udfs().items():
-        spark.udf.register(name, u)
 
 
 def haversine_m(lat1, lon1, lat2, lon2):

@@ -5,16 +5,14 @@ All functions are batch NumPy (the hot path inside pandas UDFs: one
 polygon x N points per call, broadcast over edges). Numeric-determinism
 policy (load-bearing for the DuckDB oracle): predicates use only
 +,-,*,comparisons (IEEE-exact, identical across engines); transcendental
-distance (haversine) is provided for reporting but query outputs that
-cross the oracle boundary round it, and kNN ordering uses squared
-euclidean degrees (exact) with an id tiebreak.
+distance (haversine, ``functions.geometry.haversine_m``) is provided for
+reporting but query outputs that cross the oracle boundary round it, and
+kNN ordering uses squared euclidean degrees (exact) with an id tiebreak.
 """
 
 from __future__ import annotations
 
 import numpy as np
-
-EARTH_RADIUS_M = 6371008.8
 
 
 def point_in_rings(px: np.ndarray, py: np.ndarray,
@@ -116,18 +114,6 @@ def geom_envelope(g) -> tuple[float, float, float, float]:
     a = np.array(envs)
     return (float(a[:, 0].min()), float(a[:, 1].min()),
             float(a[:, 2].max()), float(a[:, 3].max()))
-
-
-def haversine_np(lat1, lon1, lat2, lon2) -> np.ndarray:
-    """Great-circle distance in meters (vectorized). Transcendental —
-    round before crossing an engine boundary (see module docstring)."""
-    la1, lo1, la2, lo2 = (np.radians(np.asarray(a, dtype=np.float64))
-                          for a in (lat1, lon1, lat2, lon2))
-    dlat = la2 - la1
-    dlon = lo2 - lo1
-    h = (np.sin(dlat / 2.0) ** 2
-         + np.cos(la1) * np.cos(la2) * np.sin(dlon / 2.0) ** 2)
-    return 2.0 * EARTH_RADIUS_M * np.arcsin(np.sqrt(np.clip(h, 0.0, 1.0)))
 
 
 def sqdist_deg_sql(lat1: str, lon1: str, lat2: str, lon2: str) -> str:

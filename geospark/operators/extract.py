@@ -103,18 +103,6 @@ _GEOTAG_SCHEMA = ("url string, warc_ts timestamp, lang string, "
                   "lat double, lon double, kind string")
 
 
-def _jvm_tags(html_s, rx: str, lat_group: int, lon_group: int, kind: str):
-    """Column expr: array<struct<lat,lon,kind>> for one tag pattern —
-    regexp_extract_all for full matches, then per-match group extraction
-    (arrays are tiny: 0-3 tags per page)."""
-    from pyspark.sql import functions as F
-    ms = F.regexp_extract_all(html_s, F.lit(rx), 0)
-    return F.transform(ms, lambda m: F.struct(
-        F.regexp_extract(m, rx, lat_group).cast("double").alias("lat"),
-        F.regexp_extract(m, rx, lon_group).cast("double").alias("lon"),
-        F.lit(kind).alias("kind")))
-
-
 def extract_pages(df):
     """pages(url, warc_ts, html, text, lang) -> one row per geotag:
     (url, warc_ts, lang, lat, lon, kind).

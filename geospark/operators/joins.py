@@ -7,20 +7,21 @@ spatial theta-joins are rewritten at DataFrame-construction time into
 so Catalyst sees plain equi-joins it can broadcast/AQE-optimize, and the
 only UDF in the plan is the vectorized ray-cast refine.
 
-Scale design:
-  * polygon side: covered into cells ONCE on the driver (dimension tables
-    are small — countries/zones; the covering is what gets broadcast, not
-    the raw geometry), with per-cell `full` flags so interior cells skip
-    the ray-cast entirely (most of a large polygon's area).
-  * point side: never shuffled for the join — `cell_encode` is a column
-    expression and the join is `broadcast(cover)`, so the probe side
-    streams map-side. groupBy after the join shuffles only the aggregate.
-  * skew: hot cells are a broadcast-join non-issue (no shuffle); for the
-    non-broadcast path `salt` replicates the cover S ways and salts the
-    probe side (SURVEY.md §2.2 skew row), plus AQE skew-join stays on.
+One path serves ``spatial_join`` and ``pip_tile_counts``:
+  * ``_polygon_side`` covers a small polygon side on the driver and a
+    large one on the executors, both in one cover schema ``(id, _cell,
+    _full, _rect, _bx0, _by0, _bx1, _by1, _gwkb)``;
+  * ``_join_cover`` broadcasts a driver-built cover (the point side
+    streams map-side, never shuffled) and sends an executor-built one
+    through a row cap and cost model (else shuffled-hash join, with AQE
+    skew-join for hot cells);
+  * ``_refine`` decides ``_full OR (_rect AND bounds)`` in the JVM and
+    ray-casts the rest.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -31,6 +32,22 @@ from ..kernels.geom import Geom
 from ..kernels.ops import point_in_rings
 from ..kernels.wkb import parse_wkb
 from ..materialize import materialize
+from .par import fanout_repartition, plan_bytes
+
+# expr vs udf refine on a collected side (r5, 2M points, local[8]): 72
+# edges 1.0/0.8 s, 288 edges 3.5/1.0, 4096 edges 23.6/1.1 — the unrolled
+# CASE outgrows janino's 64 KB method cap (at 8192 edges building it OOMs
+# the driver). expr keeps a Python-free plan for small dims.
+EXPR_MAX_EDGES = 128
+
+COVER_COLS = ("_cell", "_full", "_rect", "_bx0", "_by0", "_bx1", "_by1",
+              "_gwkb")
+
+
+def _cover_schema(poly_id_col: str) -> str:
+    return (f"{poly_id_col} long, _cell long, _full boolean, "
+            f"_rect boolean, _bx0 double, _by0 double, "
+            f"_bx1 double, _by1 double, _gwkb binary")
 
 
 def _geom_rings(g: Geom) -> list[list[np.ndarray]]:
@@ -80,13 +97,40 @@ def polygon_cover(polys: list[tuple[int, bytes | None]], res: int
     return cover, ring_map
 
 
+def _cover_rows(polys: list[tuple[int, bytes | None]], res: int,
+                carry_wkb: bool):
+    """[(poly_id, wkb)] -> (rows of the cover schema, ring map). The
+    Python covering tier: no rectangle fast path (``_rect`` False).
+    With ``carry_wkb`` the boundary cells carry the polygon WKB for the
+    WKB refine UDF; full cells always stay NULL (no refine, no
+    payload)."""
+    cover, ring_map = polygon_cover(polys, res)
+    wkb_of = dict(polys)
+    rows = [(int(p), int(c), bool(f), False, 0.0, 0.0, 0.0, 0.0,
+             None if f or not carry_wkb else wkb_of[p])
+            for p, c, f in cover]
+    return rows, ring_map
+
+
+def _res_for_area(med: float | None, min_res: int, max_res: int,
+                  target_cells_per_poly: int) -> int:
+    """Smallest res whose cells per median envelope area reach the
+    target — balances explode factor (broadcast size) against
+    candidates-per-cell (refine cost)."""
+    if med is None:
+        return min_res
+    for res in range(min_res, max_res + 1):
+        cell = (360.0 / (1 << res)) * (180.0 / (1 << res))
+        if med / cell >= target_cells_per_poly:
+            return res
+    return max_res
+
+
 def pick_resolution(polys: list[tuple[int, bytes | None]],
                     min_res: int = 4, max_res: int = 12,
                     target_cells_per_poly: int = 64) -> int:
-    """Resolution selection (SURVEY.md §4.2 item 3): smallest res whose
-    expected bbox-cover size per polygon reaches the target — balances
-    explode factor (broadcast size) against candidates-per-cell (refine
-    cost). Driver-side, envelope math only."""
+    """Resolution selection (SURVEY.md §4.2 item 3) over collected
+    polygons: driver-side, envelope math only."""
     from ..kernels.ops import geom_envelope
     areas = []
     for _, wkb in polys:
@@ -97,14 +141,25 @@ def pick_resolution(polys: list[tuple[int, bytes | None]],
         if np.isnan(x0):
             continue
         areas.append(max(x1 - x0, 1e-9) * max(y1 - y0, 1e-9))
-    if not areas:
-        return min_res
-    med = float(np.median(areas))
-    for res in range(min_res, max_res + 1):
-        cell_deg_x, cell_deg_y = 360.0 / (1 << res), 180.0 / (1 << res)
-        if med / (cell_deg_x * cell_deg_y) >= target_cells_per_poly:
-            return res
-    return max_res
+    med = float(np.median(areas)) if areas else None
+    return _res_for_area(med, min_res, max_res, target_cells_per_poly)
+
+
+def _pick_resolution_distributed(polys_df, geom_col: str,
+                                 min_res: int = 4, max_res: int = 12,
+                                 target_cells_per_poly: int = 64) -> int:
+    """pick_resolution without collecting geometry: one agg job over
+    envelope areas (median via percentile_approx)."""
+    from pyspark.sql import functions as F
+
+    from ..functions.geometry import st_envelope
+    env = polys_df.select(st_envelope(geom_col).alias("e"))
+    area = ((F.col("e.xmax") - F.col("e.xmin"))
+            * (F.col("e.ymax") - F.col("e.ymin")))
+    row = env.select(area.alias("a")).filter(F.col("a") > 0) \
+        .agg(F.percentile_approx("a", 0.5).alias("med")).collect()[0]
+    med = float(row["med"]) if row["med"] is not None else None
+    return _res_for_area(med, min_res, max_res, target_cells_per_poly)
 
 
 def refine_expr_col(ring_map: dict[int, list[list[np.ndarray]]],
@@ -137,16 +192,13 @@ def total_edges(ring_map: dict[int, list[list[np.ndarray]]]) -> int:
 
 
 def make_refine_udf(ring_map: dict[int, list[list[np.ndarray]]]):
-    """(poly_id, lon, lat) -> bool pandas UDF. The ring map travels in
-    the closure (pickled once, reused per executor); the batch is grouped
-    by poly_id so each polygon's ray-cast runs vectorized over its
-    points.
-
-    NULL poly_id rows return False at O(1) cost — the caller gates the
-    udf input with ``when(~_full, pid)`` so interior rows ride the same
-    single filter pass without paying a ray-cast (Spark extracts Python
-    UDFs from the plan unconditionally, so per-row short-circuit is
-    impossible; per-row CHEAPNESS is the next best thing)."""
+    """(poly_id, lon, lat) -> bool pandas UDF for a collected side. The
+    ring map travels in the closure (pickled once, reused per executor);
+    the batch is grouped by poly_id so each polygon's ray-cast runs
+    vectorized over its points. NULL poly_id rows return False at O(1)
+    cost — the caller gates the input with ``when(~_full, pid)``. On a
+    collected side it beats the WKB UDF 1.5x (288 edges) to 6.5x (4096
+    edges), which ships the polygon bytes with every boundary row."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("boolean")
@@ -166,35 +218,16 @@ def make_refine_udf(ring_map: dict[int, list[list[np.ndarray]]]):
     return refine
 
 
-def _rect_of(pgs: list[list[np.ndarray]]
-             ) -> tuple[bool, float, float, float, float]:
-    """(is_axis_aligned_rectangle, x0, y0, x1, y1) of a parsed polygon.
-    Structural check (1 ring, 5 rows, 2 distinct x, 2 distinct y, every
-    edge axis-aligned) — exact, no float tolerance games."""
-    if len(pgs) != 1 or len(pgs[0]) != 1:
-        return False, 0.0, 0.0, 0.0, 0.0
-    r = pgs[0][0]
-    if r.shape[0] != 5:
-        return False, 0.0, 0.0, 0.0, 0.0
-    xs, ys = np.unique(r[:4, 0]), np.unique(r[:4, 1])
-    if xs.size != 2 or ys.size != 2:
-        return False, 0.0, 0.0, 0.0, 0.0
-    dx, dy = np.diff(r[:, 0]), np.diff(r[:, 1])
-    if not bool(np.all((dx == 0) | (dy == 0))):
-        return False, 0.0, 0.0, 0.0, 0.0
-    return (True, float(xs[0]), float(ys[0]), float(xs[1]), float(ys[1]))
-
-
 def _make_rect_info_udf():
     """geom_wkb -> struct(rect, x0, y0, x1, y1): fully vectorized
-    axis-aligned-rectangle detection over the batch WKB buffers (same
-    structural criteria as :func:`_rect_of` — 1 ring, 5 rows, closed,
-    2 distinct x, 2 distinct y, every edge axis-aligned — no float
-    tolerance). One cheap Arrow pass over the polygon side replaces
-    per-polygon Python covering for the rectangle-dominant case.
-    Big-endian / EWKB-exotic rectangles fall outside the LE fast
-    parser and are reported rect=False — they take the (exact, slower)
-    general covering tier instead; output is unchanged.
+    axis-aligned-rectangle detection over the batch WKB buffers
+    (structural, no float tolerance: 1 ring, 5 rows, closed, 2 distinct
+    x, 2 distinct y, every edge axis-aligned). One cheap Arrow pass over
+    the polygon side replaces per-polygon Python covering for the
+    rectangle-dominant case. Big-endian / EWKB-exotic rectangles fall
+    outside the LE fast parser and are reported rect=False — they take
+    the (exact, slower) general covering tier instead; output is
+    unchanged.
 
     Created lazily per call: module-level pandas_udf crashes on worker
     re-import (see functions/geometry.py)."""
@@ -245,100 +278,70 @@ def _make_rect_info_udf():
     return info
 
 
+def _cell_ranges(x0, y0, x1, y1, n: int):
+    """Closed-intersect cell index ranges (ix0, ix1, iy0, iy1) of the
+    box [x0, x1] x [y0, y1] on an n x n grid, clamped to the grid. Cell
+    i intersects [x0, x1] iff i >= ceil((x0+180)/360*n) - 1 and
+    i <= floor((x1+180)/360*n): the ceil-1 form includes the cell whose
+    RIGHT edge merely touches x0 (and floor the one whose left edge
+    touches x1), mirroring the Python covering's closed bbox overlap."""
+    from pyspark.sql import functions as F
+    zero, nmax = F.lit(0).cast("long"), F.lit(n - 1).cast("long")
+    return (F.greatest(zero, F.ceil((x0 + 180.0) / 360.0 * n)
+                       .cast("long") - 1),
+            F.least(nmax, F.floor((x1 + 180.0) / 360.0 * n).cast("long")),
+            F.greatest(zero, F.ceil((y0 + 90.0) / 180.0 * n)
+                       .cast("long") - 1),
+            F.least(nmax, F.floor((y1 + 90.0) / 180.0 * n).cast("long")))
+
+
 def distributed_polygon_cover(polys_df, res: int,
                               poly_id_col: str = "zone_id",
                               geom_col: str = "geom_wkb"):
-    """Covering computed ON EXECUTORS: -> DataFrame(poly_id, _cell,
-    _full, _rect, _bx0.._by1). The polygon side stays a DataFrame end
-    to end — the driver never collects geometry, so a million-polygon
-    side scales out instead of OOMing the driver (round-1 gap:
-    polygon_cover ran driver-side).
+    """Covering computed ON EXECUTORS, in the cover schema: the driver
+    never collects geometry, so a million-polygon side scales out.
 
-    Two tiers (r5): axis-aligned rectangles — the typical LARGE
-    polygon side (parcels, tiles, boxes) — are detected by one
-    vectorized Arrow pass and covered with PURE JVM column expressions
-    (sequence + explode over the closed-intersect cell index ranges,
-    exact integer cell-id arithmetic identical to cells.cell_encode);
-    only the non-rectangular residue pays the per-polygon Python
-    covering (mapInPandas, repartitioned to the full core budget — a
-    polygon table stored as k files otherwise caps covering
-    parallelism at k). Measured at sf1 (200k boxes, 6M points): the
-    all-Python covering was 9.7 s of the join's 10.3 s wall; the JVM
-    tier removes it. Cell ranges are closed-intersect (a rect touching
-    a cell only on its boundary still covers it) — matching the
-    Python covering's closed bbox overlap, which poly_join's
-    shared-boundary semantics relies on. ``_full`` is the exact
-    cell-inside-rect test (left/bottom closed, right/top open, the
-    same convention as the rect refine tier)."""
+    Two tiers (r5): axis-aligned rectangles — the typical LARGE polygon
+    side (parcels, tiles, boxes) — are detected by one vectorized Arrow
+    pass and covered with PURE JVM column expressions (sequence +
+    explode over the closed-intersect cell index ranges, the same
+    integer cell ids as cells.cell_encode); only the non-rectangular
+    residue pays the per-polygon Python covering (mapInPandas,
+    repartitioned to the full core budget). At sf1 (200k boxes) the
+    all-Python covering was 9.7 s of the join's 10.3 s. Closed-intersect
+    ranges match the Python covering's closed bbox overlap, which
+    poly_join's shared-boundary semantics relies on; ``_full`` is the
+    exact cell-inside-rect test (left/bottom closed, right/top open, the
+    convention of the rect refine)."""
     from pyspark.sql import functions as F
-    schema = (f"{poly_id_col} long, _cell long, _full boolean, "
-              f"_rect boolean, _bx0 double, _by0 double, "
-              f"_bx1 double, _by1 double, _gwkb binary")
-    cols = [poly_id_col, "_cell", "_full", "_rect",
-            "_bx0", "_by0", "_bx1", "_by1", "_gwkb"]
+    cols = [poly_id_col, *COVER_COLS]
 
     def fn(it):
         for pdf in it:
-            pairs = [(int(p), bytes(w) if w is not None else None)
-                     for p, w in zip(pdf[poly_id_col], pdf[geom_col])]
-            wkb_of = dict(pairs)
-            rows, _ring_map = polygon_cover(pairs, res)
-            # _gwkb NULL-gate: boundary cells carry the polygon wkb so
-            # the join's refine reads the geometry from the cover row
-            # itself — no second polys join, no second probe scan.
-            # Full cells stay NULL (no refine, no payload).
-            out = [(pid, c, f, False, 0.0, 0.0, 0.0, 0.0,
-                    None if f else wkb_of[pid])
-                   for pid, c, f in rows]
-            yield pd.DataFrame(out, columns=cols) if out else \
-                pd.DataFrame({poly_id_col: pd.Series([], dtype="int64"),
-                              "_cell": pd.Series([], dtype="int64"),
-                              "_full": pd.Series([], dtype="bool"),
-                              "_rect": pd.Series([], dtype="bool"),
-                              "_bx0": pd.Series([], dtype="float64"),
-                              "_by0": pd.Series([], dtype="float64"),
-                              "_bx1": pd.Series([], dtype="float64"),
-                              "_by1": pd.Series([], dtype="float64"),
-                              "_gwkb": pd.Series([], dtype="object")})
+            rows, _ring_map = _cover_rows(
+                [(int(p), bytes(w) if w is not None else None)
+                 for p, w in zip(pdf[poly_id_col], pdf[geom_col])],
+                res, carry_wkb=True)
+            if rows:
+                yield pd.DataFrame(rows, columns=cols)
 
-    # Freeze the DETECTION output (200k rows for a 200k-polygon side),
-    # not the exploded cover (2.3M rows): the Python detect pass then
-    # runs exactly once however many branches reference the cover, the
-    # tiny one-row-per-polygon checkpoint replaces the cover-sized one,
-    # and the pure-JVM explode below stays INLINE in the consumer's
-    # plan — for an all-rect side the scan->explode->join fuses into
-    # one codegen stage with no Python and no cover materialization.
-    # r6: the polygon side is typically a handful of parquet files —
-    # the Arrow detect pass would run on that many cores; one cheap
-    # conditional exchange spreads it (guide §2.6). The checkpoint is
-    # LAZY and geometry-free: the stats agg right below materializes
-    # it in the same job (one job instead of eager-checkpoint + agg),
-    # and the frozen rows carry only (id, _ri) — the general tier
-    # re-joins the polygon geometry by id from the source, so an
-    # all-rect side never checkpoints its WKB payload at all.
-    from .par import fanout_repartition
+    # Freeze the one-row-per-polygon DETECTION output, not the exploded
+    # cover: the Python detect pass runs once however many branches
+    # read the cover, and the pure-JVM explode stays inline in the
+    # consumer's plan (scan -> explode -> join fuses into one codegen
+    # stage). fanout_repartition spreads a few-file side over the cores;
+    # the LAZY, geometry-free checkpoint is filled by the stats agg
+    # below in the same job, and the general tier re-joins geometry by
+    # id from the source.
     info = materialize(fanout_repartition(polys_df).select(
         poly_id_col,
         _make_rect_info_udf()(F.col(geom_col)).alias("_ri")),
         eager=False)
 
-    from ..functions.cells import _RES_SHIFT
     n = 1 << res
     x0, y0 = F.col("_bx0"), F.col("_by0")
     x1, y1 = F.col("_bx1"), F.col("_by1")
-    zero, nmax = F.lit(0).cast("long"), F.lit(n - 1).cast("long")
-    # closed-intersect index range: cell i intersects [x0, x1] iff
-    # (i+1)*step > x0-ish — exactly i >= ceil((x0+180)/360*n) - 1 and
-    # i <= floor((x1+180)/360*n); the ceil-1 form includes the cell
-    # whose RIGHT edge merely touches x0 (and floor the one whose left
-    # edge touches x1), mirroring the Python covering's closed bbox
-    # overlap
-    ix0 = F.greatest(zero, F.ceil((x0 + 180.0) / 360.0 * n)
-                     .cast("long") - 1)
-    ix1 = F.least(nmax, F.floor((x1 + 180.0) / 360.0 * n).cast("long"))
-    iy0 = F.greatest(zero, F.ceil((y0 + 90.0) / 180.0 * n)
-                     .cast("long") - 1)
-    iy1 = F.least(nmax, F.floor((y1 + 90.0) / 180.0 * n).cast("long"))
+    ix0, ix1, iy0, iy1 = _cell_ranges(x0, y0, x1, y1, n)
     cx0 = F.col("_ix") * (360.0 / n) - 180.0
     cx1 = (F.col("_ix") + 1) * (360.0 / n) - 180.0
     cy0 = F.col("_iy") * (180.0 / n) - 90.0
@@ -369,29 +372,16 @@ def distributed_polygon_cover(polys_df, res: int,
 
     gen = (info.filter(~F.col("_ri.rect")).select(poly_id_col)
            .join(polys_df.select(poly_id_col, geom_col), poly_id_col))
-    # r6: ONE tiny agg over the frozen info replaces three separate
-    # per-call jobs (the old `gen.limit(1).count()` tier probe, the
-    # caller's `n_polys` count for the broadcast decision, and its
-    # 64-cells/poly guess): polygon count, non-rect residue count, and
-    # the EXACT exploded row count of the rect cover (the same clamped
-    # closed-intersect index ranges the explode below materializes).
-    n = 1 << res
-    sx0, sy0 = F.col("_ri.x0"), F.col("_ri.y0")
-    sx1, sy1 = F.col("_ri.x1"), F.col("_ri.y1")
-    zero_l = F.lit(0).cast("long")
-    nmax_l = F.lit(n - 1).cast("long")
-    six0 = F.greatest(zero_l, F.ceil((sx0 + 180.0) / 360.0 * n)
-                      .cast("long") - 1)
-    six1 = F.least(nmax_l, F.floor((sx1 + 180.0) / 360.0 * n)
-                   .cast("long"))
-    siy0 = F.greatest(zero_l, F.ceil((sy0 + 90.0) / 180.0 * n)
-                      .cast("long") - 1)
-    siy1 = F.least(nmax_l, F.floor((sy1 + 90.0) / 180.0 * n)
-                   .cast("long"))
+    # ONE tiny agg over the frozen info: polygon count, non-rect residue
+    # count and the EXACT exploded row count of the rect cover.
+    six0, six1, siy0, siy1 = _cell_ranges(
+        F.col("_ri.x0"), F.col("_ri.y0"), F.col("_ri.x1"),
+        F.col("_ri.y1"), n)
+    zero = F.lit(0).cast("long")
     rect_rows = F.when(
         F.col("_ri.rect"),
-        F.greatest(zero_l, six1 - six0 + 1)
-        * F.greatest(zero_l, siy1 - siy0 + 1)).otherwise(F.lit(0))
+        F.greatest(zero, six1 - six0 + 1)
+        * F.greatest(zero, siy1 - siy0 + 1)).otherwise(F.lit(0))
     st = info.agg(
         F.count(F.lit(1)).alias("_np"),
         F.sum(F.when(F.col("_ri.rect"), 0).otherwise(1)).alias("_ng"),
@@ -399,28 +389,29 @@ def distributed_polygon_cover(polys_df, res: int,
     stats = {"n_polys": int(st["_np"]),
              "n_gen": int(st["_ng"] or 0),
              "rect_rows": int(st["_rr"] or 0)}
-    # all-rect side (tiles/boxes/parcels — the common storage shape):
-    # skip the general union branch AT PLAN TIME, so the returned cover
-    # is a pure column-expression subtree.
+    # all-rect side: skip the general union branch AT PLAN TIME; the
+    # tag tells consumers the cover is pure JVM (its refine needs no UDF)
     if stats["n_gen"] == 0:
-        # consumers key on this: a pure-JVM cover needs no cover-sized
-        # materialization to be referenced from multiple branches
         rcov._geospark_pure_jvm = True
         rcov._geospark_cover_stats = stats
         return rcov
     par = polys_df.sparkSession.sparkContext.defaultParallelism
-    gcov = gen.repartition(par).mapInPandas(fn, schema=schema)
+    gcov = gen.repartition(par).mapInPandas(
+        fn, schema=_cover_schema(poly_id_col))
     out = rcov.unionByName(gcov)
     out._geospark_cover_stats = stats
     return out
 
 
 def make_wkb_refine_udf():
-    """(geom_wkb, lon, lat) -> bool pandas UDF for the distributed
-    path: the polygon geometry arrives as a column (joined on poly_id),
-    not a driver-pickled closure. Each batch groups rows by identical
-    WKB bytes so every polygon's ray-cast runs vectorized over its
-    points (one parse per distinct polygon per batch)."""
+    """(geom_wkb, lon, lat) -> bool pandas UDF: the polygon geometry
+    arrives as a column (the cover's ``_gwkb``), not a driver-pickled
+    closure. Each batch groups rows by identical WKB bytes so every
+    polygon's ray-cast runs vectorized over its points (one parse per
+    distinct polygon per batch). NULL rows (full cells) return False at
+    O(1) cost: Spark extracts Python UDFs from the plan unconditionally,
+    so there is no per-row short-circuit; per-row cheapness is the next
+    best thing."""
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("boolean")
@@ -464,312 +455,191 @@ def make_wkb_refine_udf():
     return refine
 
 
-def _pick_resolution_distributed(polys_df, geom_col: str,
-                                 min_res: int = 4, max_res: int = 12,
-                                 target_cells_per_poly: int = 64) -> int:
-    """pick_resolution without collecting geometry: one agg job over
-    envelope areas (median via percentile_approx)."""
-    from pyspark.sql import functions as F
+class _Side(NamedTuple):
+    """A covered polygon side. ``rows``/``ring_map`` are set only when
+    the side was collected to the driver."""
+    cover: object  # DataFrame in the cover schema
+    res: int
+    rows: list | None
+    ring_map: dict | None
 
-    from ..functions.geometry import st_envelope
-    env = polys_df.select(st_envelope(geom_col).alias("e"))
-    area = ((F.col("e.xmax") - F.col("e.xmin"))
-            * (F.col("e.ymax") - F.col("e.ymin")))
-    row = env.select(area.alias("a")).filter(F.col("a") > 0) \
-        .agg(F.percentile_approx("a", 0.5).alias("med")).collect()[0]
-    med = float(row["med"]) if row["med"] is not None else None
-    if med is None:
-        return min_res
-    for res in range(min_res, max_res + 1):
-        cell = (360.0 / (1 << res)) * (180.0 / (1 << res))
-        if med / cell >= target_cells_per_poly:
-            return res
-    return max_res
+
+def _polygon_side(polys_df, res: int | None, poly_id_col: str,
+                  geom_col: str, distributed: bool) -> _Side:
+    """The one side builder, and the one driver-or-executors choice: the
+    side is collected and covered on the driver unless ``distributed``
+    is set or it is over the driver caps, else covered on the executors;
+    both return the cover schema. The byte cap reads the optimizer's
+    estimate at zero job cost (a limit(cap+1) probe measured +0.45 s per
+    call); a side of unknown size (RDD-backed) is collected and then
+    held to the row cap. File-backed sides always report real bytes."""
+    conf = polys_df.sparkSession.conf
+    polys = None
+    if not distributed:
+        size = plan_bytes(polys_df)
+        if size is None or size <= int(conf.get(
+                "spark.geospark.pip.maxDriverPolyBytes", str(256 << 20))):
+            rows = polys_df.select(poly_id_col, geom_col).collect()
+            if len(rows) <= int(conf.get(
+                    "spark.geospark.pip.maxDriverPolygons", "100000")):
+                polys = [(r[0], r[1]) for r in rows]
+    if polys is None:
+        if res is None:
+            res = _pick_resolution_distributed(polys_df, geom_col)
+        return _Side(distributed_polygon_cover(polys_df, res, poly_id_col,
+                                               geom_col), res, None, None)
+    if res is None:
+        res = pick_resolution(polys)
+    # a collected side refines from the ring map (see _refine), so its
+    # broadcast cover carries no geometry
+    rows, ring_map = _cover_rows(polys, res, carry_wkb=False)
+    cover = polys_df.sparkSession.createDataFrame(
+        rows, schema=_cover_schema(poly_id_col))
+    return _Side(cover, res, rows, ring_map)
+
+
+def _broadcast_executor_cover(points, cover) -> bool:
+    """Broadcast-or-shuffle for an executor-built cover. Broadcasting
+    collects the cover through the driver, so it needs the cover under a
+    row cap (exact rect rows + ~64 cells per non-rect polygon). Cost
+    model: broadcasting saves shuffling the POINT side but pays cover
+    bytes x every executor; when the point side is not much bigger than
+    the cover a shuffled-hash join is cheaper (sf1: 1.4 s vs 2.3 s), when
+    points dwarf it broadcast wins by orders of magnitude. A point side
+    of unknown size counts as big."""
+    conf = points.sparkSession.conf
+    st = cover._geospark_cover_stats
+    est = st["rect_rows"] + st["n_gen"] * 64
+    cap = int(conf.get("spark.geospark.cover.broadcastMaxRows", "4000000"))
+    factor = int(conf.get("spark.geospark.cover.broadcastCostFactor", "8"))
+    pts_bytes = plan_bytes(points)
+    cover_bytes = est * 64  # ~9 narrow columns per cover row
+    return est <= cap and (pts_bytes is None
+                           or pts_bytes > factor * cover_bytes)
+
+
+def _join_cover(points, side: _Side, lat_col: str, lon_col: str,
+                broadcast_cover: bool | None):
+    """The one join block: points equi-joined with the side's cover on
+    cell. A collected cover is broadcast; an executor-built one goes
+    through ``_broadcast_executor_cover``. ``broadcast_cover`` overrides
+    either choice."""
+    from pyspark.sql import functions as F
+    collected = side.rows is not None
+    if broadcast_cover is None:
+        broadcast_cover = collected or \
+            _broadcast_executor_cover(points, side.cover)
+    if broadcast_cover and not collected:
+        # broadcast runs the fanout + refine at the probe SCAN's
+        # parallelism (1-6 tasks for a single-row-group file); one
+        # size-capped round-robin exchange buys full-core fanout
+        # (8.4 s -> 2.7 s at sf1; no-op at production scan widths)
+        points = fanout_repartition(points, force=True)
+    pts = points.withColumn("_cell",
+                            cell_encode(lat_col, lon_col, side.res))
+    # non-broadcast: the cover is the shuffled-hash BUILD side (sort-merge
+    # measured 8.0 s vs 1.4 s at sf1); the hint degrades to SMJ when a
+    # build partition can't fit, and AQE skew-join still applies
+    cov = (F.broadcast(side.cover) if broadcast_cover
+           else side.cover.hint("shuffle_hash"))
+    return pts.join(cov, "_cell", "inner")
+
+
+def _refine(joined, side: _Side, poly_id_col: str, lon_col: str,
+            lat_col: str):
+    """The one refine rule, as ONE filter over the joined rows:
+    ``_full OR (_rect AND bounds)`` in the JVM — the half-open
+    [x0, x1) x [y0, y1) test replicates the even-odd ray cast EXACTLY
+    for an axis-aligned rectangle — then the ray cast for the rest: the
+    unrolled ``expr`` when the side was collected and has at most
+    EXPR_MAX_EDGES edges, the ring-map UDF when it was collected and has
+    more, and the WKB UDF over ``_gwkb`` for an executor-built cover
+    (none for an all-rectangle one). Single pass: a union of per-tier
+    filters would re-execute the whole upstream once per tier (r4/r5:
+    1.6-2.6x slower)."""
+    from pyspark.sql import functions as F
+    lon, lat = F.col(lon_col), F.col(lat_col)
+    pred = F.col("_full") | (
+        F.col("_rect") & (lon >= F.col("_bx0")) & (lon < F.col("_bx1"))
+        & (lat >= F.col("_by0")) & (lat < F.col("_by1")))
+    if side.ring_map is None:
+        if not getattr(side.cover, "_geospark_pure_jvm", False):
+            pred = pred | make_wkb_refine_udf()(F.col("_gwkb"), lon, lat)
+    elif total_edges(side.ring_map) <= EXPR_MAX_EDGES:
+        pred = pred | refine_expr_col(side.ring_map, poly_id_col,
+                                      lon_col, lat_col)
+    else:
+        pid = F.when(~F.col("_full"), F.col(poly_id_col))
+        pred = pred | make_refine_udf(side.ring_map)(pid, lon, lat)
+    return joined.filter(pred).drop(*COVER_COLS)
 
 
 def spatial_join(points, polys_df, *, res: int | None = None,
                  lat_col: str = "lat", lon_col: str = "lon",
                  poly_id_col: str = "zone_id", geom_col: str = "geom_wkb",
                  how: str = "inner", broadcast_cover: bool | None = None,
-                 salt: int = 0, refine_mode: str = "auto",
                  distributed: bool = False):
     """Point-in-polygon join.
 
     points: DataFrame with lat/lon double columns.
-    polys_df: dimension DataFrame (poly_id, wkb geometry).
-    Returns points columns + poly_id (inner), or semi/anti projections.
+    polys_df: polygon DataFrame (poly_id, wkb geometry).
+    Returns points columns + poly_id (inner), or the points columns of
+    the matched (left_semi) / unmatched (left_anti) rows.
 
-    Plan shape: points -> [cell expr] -> equi-join broadcast(cover) ->
-    ONE refine filter (``_full OR ray_cast``; the udf tier NULL-gates
-    the poly_id so interior cells skip the ray-cast). With ``salt>0`` and
-    ``broadcast_cover=False``: cover replicated x salt, probe side salted
-    by a hash — the explicit skew treatment for the shuffle path.
-
-    ``distributed=True`` keeps the polygon side a DataFrame end to end
-    (covering via mapInPandas on executors; refine reads the geometry
-    as a joined column) — use for large polygon sides (parcels, not
-    countries) where a driver collect would OOM. ``salt``/
-    ``refine_mode`` apply to the driver path only; the distributed path
-    relies on AQE skew handling. ``broadcast_cover=None`` (default)
-    picks automatically: always broadcast on the driver path; on the
-    distributed path broadcast only while the estimated cover stays
-    driver-safe (~10^6 rows), else shuffle equi-join."""
+    Plan shape: points -> [cell expr] -> equi-join cover -> ONE refine
+    filter (see ``_refine``). The polygon side is collected and covered
+    on the driver while it is under the driver caps
+    (``spark.geospark.pip.maxDriverPolyBytes`` / ``maxDriverPolygons``)
+    and covered on the executors above them; ``distributed=True`` skips
+    the collect outright. A collected cover is broadcast; an
+    executor-built one is broadcast while the cover is driver-safe and
+    the point side dwarfs it, else shuffled-hash joined (AQE skew-join
+    handles hot cells). ``broadcast_cover`` overrides that choice."""
     from pyspark.sql import functions as F
 
-    spark = points.sparkSession
-    # semi/anti need a per-row identity: re-joining on all point columns
-    # is null-unsafe (a matched row with a null passthrough column never
-    # equals itself and wrongly reappears in the anti output) and
-    # distinct() collapses legitimately duplicated input rows
-    if how in ("left_semi", "left_anti") and "_rid" not in points.columns:
-        # (the _rid guard keeps the r6 driver->distributed auto-route
-        # from re-materializing ids on re-entry)
-        # monotonically_increasing_id is nondeterministic (partition- and
-        # order-dependent): the points subtree is evaluated twice (once
-        # under `matched`, once as the probe side of _spatial_join_how),
-        # and a recompute downstream of a shuffle could assign DIFFERENT
-        # ids to the two evaluations — silently corrupting semi/anti
-        # output. Materialize the ids once so both branches read the
-        # same frozen rows (materialize(): localCheckpoint by default,
-        # reliable checkpoint() under spark.geospark.reliableCheckpoint).
+    if how not in ("inner", "left_semi", "left_anti"):
+        raise ValueError(f"how={how!r}")
+    side = _polygon_side(polys_df, res, poly_id_col, geom_col, distributed)
+    if how != "inner":
+        # semi/anti need a per-row identity (re-joining on all point
+        # columns is null-unsafe; distinct() collapses duplicate rows),
+        # minted here under a name no caller column holds.
+        # monotonically_increasing_id is nondeterministic and the points
+        # are read twice, so the ids are materialized once.
+        rid = "_rid"
+        while rid in points.columns:
+            rid = "_" + rid
         points = materialize(points.withColumn(
-            "_rid", F.monotonically_increasing_id()))
-
-    if distributed:
-        # large polygon side: covering on executors, geometry delivered
-        # to the refine as a joined column — no driver collect anywhere
-        if res is None:
-            res = _pick_resolution_distributed(polys_df, geom_col)
-        # the cover arrives with its Python DETECTION pass already
-        # frozen inside distributed_polygon_cover (r5); the cover
-        # itself stays inline in every case.
-        cover_df = distributed_polygon_cover(
-            polys_df, res, poly_id_col, geom_col)
-        # the builder tags an all-rect cover; a general tier exists
-        # exactly when the tag is absent (replaces the r4 probe JOB
-        # that re-ran the covering just to ask). Since the matched set
-        # is now ONE filter pass (below), the cover has a single
-        # consumer and needs no cover-sized materialization — the
-        # per-polygon detection pass is frozen inside the builder, and
-        # the small per-poly covering re-runs per action, not the
-        # exploded cover.
-        has_general = not getattr(cover_df, "_geospark_pure_jvm", False)
-        if broadcast_cover is None:
-            # size-based choice: broadcasting the cover collects the
-            # exploded cover through the driver — fine at ~10^6 rows,
-            # GBs at 10^8. r6: the cover builder now reports the EXACT
-            # rect-cover row count (plus the non-rect residue, which
-            # the resolution picker aims at ~64 cells/poly), so the
-            # decision no longer mis-sizes an all-rect side by the
-            # 64x guess (measured at sf1: a 200k-box side has a 2.3M-
-            # row cover — broadcastable — but 200k*64=12.8M forced the
-            # shuffle join: 8.0 s vs 2.7 s for broadcast+wide probe).
-            # Above the cap: shuffle equi-join (AQE skew-handled).
-            stats = getattr(cover_df, "_geospark_cover_stats", None)
-            if stats is not None:
-                est = stats["rect_rows"] + stats["n_gen"] * 64
-            else:
-                est = polys_df.select(poly_id_col).count() * 64
-            cap = int(points.sparkSession.conf.get(
-                "spark.geospark.cover.broadcastMaxRows", "4000000"))
-            # r6 cost model: broadcasting saves shuffling the POINT
-            # side but pays (cover bytes x every executor) plus a
-            # driver-side relation build. When the point side is not
-            # much bigger than the cover (interactive / bench sizes),
-            # a shuffled-hash join with the cover as build side is
-            # strictly cheaper (measured at sf1: 1.4 s vs 2.3 s core);
-            # when points dwarf the cover (the 100 TB case) broadcast
-            # wins by orders of magnitude. Compare estimated bytes
-            # with a documented margin for the per-executor fanout.
-            try:
-                pts_bytes = int(points._jdf.queryExecution()
-                                .optimizedPlan().stats().sizeInBytes())
-            except Exception:
-                pts_bytes = None
-            cover_bytes = est * 64  # ~9 narrow columns per cover row
-            factor = int(points.sparkSession.conf.get(
-                "spark.geospark.cover.broadcastCostFactor", "8"))
-            worth_it = (pts_bytes is None
-                        or pts_bytes > factor * cover_bytes)
-            broadcast_cover = est <= cap and worth_it
-        if broadcast_cover:
-            # broadcast leaves the probe side exchange-free, so the
-            # whole candidate fanout + refine + partial agg runs at
-            # the SCAN's parallelism — which for a single-row-group
-            # parquet file is 1-6 tasks regardless of core count. One
-            # size-capped round-robin exchange of the (narrow) point
-            # side buys full-core fanout: 8.4 s -> 2.7 s at sf1
-            # (guide §2.6/§6; no-op at production scan widths).
-            from .par import fanout_repartition
-            points = fanout_repartition(points, force=True)
-        pts = points.withColumn("_cell",
-                                cell_encode(lat_col, lon_col, res))
-        # non-broadcast tier: hint the cover as the shuffled-hash BUILD
-        # side — sort-merge pays two full sorts and per-key buffering
-        # on a many-match join (measured 8.0 s vs 1.4 s at sf1); the
-        # hint degrades gracefully to SMJ when a build partition can't
-        # fit, and AQE skew-join still applies.
-        cov = (F.broadcast(cover_df) if broadcast_cover
-               else cover_df.hint("shuffle_hash"))
-        joined = pts.join(cov, "_cell", "inner")
-        # rectangle fast path: [x0, x1) x [y0, y1) replicates the
-        # even-odd ray cast EXACTLY for an axis-aligned rectangle
-        # (left/bottom edges inside, right/top outside) — pure JVM.
-        # Interior + rect-boundary are decided in ONE pass
-        # (`_full OR (_rect AND bounds)`): a union of per-tier filters
-        # re-executes the whole upstream scan once per tier (r4 —
-        # measured as duplicated heavy stages; the probe-side scan is
-        # the expensive part at web scale, the bounds compare is not).
-        jvm_pred = (
-            F.col("_full")
-            | (F.col("_rect")
-               & (F.col(lon_col) >= F.col("_bx0"))
-               & (F.col(lon_col) < F.col("_bx1"))
-               & (F.col(lat_col) >= F.col("_by0"))
-               & (F.col(lat_col) < F.col("_by1"))))
-        drop_cols = ["_cell", "_full", "_rect",
-                     "_bx0", "_by0", "_bx1", "_by1", "_gwkb"]
-        if has_general:
-            # general (non-rectangle) residue, SAME single pass: the
-            # cover row carries the polygon wkb on general boundary
-            # cells (_gwkb, NULL everywhere else — see
-            # distributed_polygon_cover), so the refine reads the
-            # geometry from the joined row. The r4 shape re-joined
-            # polys_df and unioned per-tier filters — a second probe
-            # scan plus a second join; the probe scan is the expensive
-            # side at web scale. NULL rows cost O(1) in the udf batch.
-            refine = make_wkb_refine_udf()
-            matched = joined.filter(
-                jvm_pred | refine(F.col("_gwkb"), F.col(lon_col),
-                                  F.col(lat_col))).drop(*drop_cols)
-        else:
-            # all-rectangle side (tiles/boxes/parcels — the common
-            # storage shape): pure-JVM plan, no Python eval nodes
-            matched = joined.filter(jvm_pred).drop(*drop_cols)
-        return _spatial_join_how(points, matched, how)
-
-    # r6 (VERDICT r5 #5): the driver tier assumes a dimension-sized
-    # polygon side; gate the collect on the optimizer's size estimate
-    # (zero extra jobs — a limit(cap+1) probe was measured at +0.45 s
-    # per call even on a 3-row dim, because collect-with-limit takes
-    # the incremental executeTake path) and auto-route oversized sides
-    # to the distributed covering instead of OOMing the driver at 100x
-    # scale. A post-collect row-count check backstops sides whose byte
-    # estimate lied.
-    cap_bytes = int(spark.conf.get(
-        "spark.geospark.pip.maxDriverPolyBytes", str(256 << 20)))
-    max_driver = int(spark.conf.get(
-        "spark.geospark.pip.maxDriverPolygons", "100000"))
-    try:
-        est_bytes = int(polys_df._jdf.queryExecution().optimizedPlan()
-                        .stats().sizeInBytes())
-        if est_bytes >= 1 << 62:
-            # Long.MaxValue sentinel: stats UNKNOWN (LogicalRDD —
-            # createDataFrame locals, checkpoints). Fall through to
-            # the collect + row-count backstop; file-backed sides (the
-            # realistic huge case) always report real bytes.
-            est_bytes = 0
-    except Exception:
-        est_bytes = 0
-    if est_bytes > cap_bytes:
-        return spatial_join(points, polys_df, res=res, lat_col=lat_col,
-                            lon_col=lon_col, poly_id_col=poly_id_col,
-                            geom_col=geom_col, how=how,
-                            broadcast_cover=broadcast_cover,
-                            distributed=True)
-    rows = polys_df.select(poly_id_col, geom_col).collect()
-    if len(rows) > max_driver:
-        return spatial_join(points, polys_df, res=res, lat_col=lat_col,
-                            lon_col=lon_col, poly_id_col=poly_id_col,
-                            geom_col=geom_col, how=how,
-                            broadcast_cover=broadcast_cover,
-                            distributed=True)
-    polys = [(r[poly_id_col], r[geom_col]) for r in rows]
-    if res is None:
-        res = pick_resolution(polys)
-    cover, ring_map = polygon_cover(polys, res)
-    cover_df = spark.createDataFrame(
-        [(int(p), int(c), bool(f)) for p, c, f in cover],
-        schema=f"{poly_id_col} long, _cell long, _full boolean")
-
-    pts = points.withColumn("_cell", cell_encode(lat_col, lon_col, res))
-
-    if broadcast_cover is None:
-        broadcast_cover = True  # driver path: cover is small by contract
-    if broadcast_cover:
-        joined = pts.join(F.broadcast(cover_df), "_cell", "inner")
-    else:
-        if salt > 0:
-            cover_df = cover_df.withColumn(
-                "_salt", F.explode(F.array(*[F.lit(i)
-                                             for i in range(salt)])))
-            pts = pts.withColumn(
-                "_salt", F.pmod(F.xxhash64(F.col(lat_col), F.col(lon_col)),
-                                F.lit(salt)).cast("int"))
-            joined = pts.join(cover_df, ["_cell", "_salt"], "inner") \
-                .drop("_salt")
-        else:
-            joined = pts.join(cover_df, "_cell", "inner")
-
-    if refine_mode == "auto":
-        # measured crossover (r5, 2M points, local[8], hugeMethodLimit
-        # 8000, both modes single-pass): expr vs udf walls — 72 edges
-        # 1.0/0.8 s, 288 edges 3.5/1.0, 576 edges 4.3/0.9, 4096 edges
-        # 23.6/1.1 (the unrolled CASE blows janino's 64 KB method cap
-        # past a few hundred edges: whole stage drops to interpreted;
-        # at 8192 building the expression OOMs the driver). The
-        # vectorized-pandas udf is flat in edge count. expr's
-        # remaining edge is a Python-free plan (no Arrow transfer, no
-        # python workers — and bit-identical DuckDB-twin semantics for
-        # the oracle queries), worth it only for small dims —
-        # countries/zones, not parcel tables.
-        refine_mode = "expr" if total_edges(ring_map) <= 128 else "udf"
-    if refine_mode == "expr":
-        # small dim: unroll the ray cast into a JVM expression and keep
-        # the join a SINGLE PASS — `_full OR ray_cast` in one filter.
-        # The union-of-two-filters alternative re-executes the whole
-        # upstream (scan -> extract -> cell -> broadcast join) once per
-        # branch: measured as a duplicated 16-task heavy stage in the
-        # flagship pipeline (r4) — the upstream scan is the expensive
-        # part at web scale, not the ray-cast, so evaluating the
-        # expression on interior rows too is the cheap side of the
-        # trade. Whole-stage codegen, zero Python either way.
-        matched = joined.filter(
-            F.col("_full")
-            | refine_expr_col(ring_map, poly_id_col, lon_col, lat_col)) \
-            .drop("_cell", "_full")
-    else:
-        # udf mode, single pass: Spark extracts Python UDFs from the
-        # plan unconditionally (no per-row short-circuit even under
-        # when/otherwise), so the udf DOES evaluate on interior rows —
-        # but the NULL-gate makes those rows O(1) inside the batch
-        # (NaN-masked before any ray-cast); the only interior cost is
-        # the Arrow transfer of (NULL, lon, lat). Measured vs the old
-        # two-pass interior/boundary union (r5, 2M cached + 6M parquet
-        # points, 4096/8192-edge dims, local[8]): single pass 1.6-2.6x
-        # faster in every case — the union re-executes the whole
-        # upstream (scan -> extract -> cell -> broadcast join) once
-        # per tier, and the upstream is the expensive side at web
-        # scale.
-        refine = make_refine_udf(ring_map)
-        matched = joined.filter(
-            F.col("_full")
-            | refine(F.when(~F.col("_full"), F.col(poly_id_col)),
-                     F.col(lon_col), F.col(lat_col))) \
-            .drop("_cell", "_full")
-    return _spatial_join_how(points, matched, how)
-
-
-def _spatial_join_how(points, matched, how: str):
+            rid, F.monotonically_increasing_id()))
+    joined = _join_cover(points, side, lat_col, lon_col, broadcast_cover)
+    matched = _refine(joined, side, poly_id_col, lon_col, lat_col)
     if how == "inner":
         return matched
-    out_cols = [c for c in points.columns if c != "_rid"]
-    rids = matched.select("_rid").distinct()
-    if how == "left_semi":
-        return points.join(rids, "_rid", "left_semi").select(out_cols)
-    if how == "left_anti":
-        return points.join(rids, "_rid", "left_anti").select(out_cols)
-    raise ValueError(f"how={how!r}")
+    return (points.join(matched.select(rid).distinct(), rid, how)
+            .drop(rid))
+
+
+_RECOMPUTE_NODES = ("Generate", "Join", "Aggregate", "Window")
+
+
+def _costly_to_recompute(df) -> bool:
+    """True when ``df``'s optimized plan holds a node that is expensive
+    or opaque to evaluate twice: a Python evaluation, generate, join,
+    aggregate or window. Matches plan node class names, so a string
+    literal that spells one of them does not trip it."""
+    try:
+        stack = [df._jdf.queryExecution().optimizedPlan()]
+        while stack:
+            node = stack.pop()
+            name = node.nodeName()
+            if name in _RECOMPUTE_NODES or any(
+                    k in name for k in ("Python", "Pandas", "Arrow")):
+                return True
+            kids = node.children()
+            stack.extend(kids.apply(i) for i in range(kids.size()))
+    except Exception:  # plan inspection is advisory only
+        return False
+    return False
 
 
 def pip_tile_counts(points, polys_df, *, res: int | None = None,
@@ -795,78 +665,38 @@ def pip_tile_counts(points, polys_df, *, res: int | None = None,
          aggregate x broadcast-cover equi-join (zero per-point work —
          most of a large polygon's area);
       3. only points landing in BOUNDARY cover cells (an
-         InSet literal predicate, no join) are individually ray-cast,
+         InSet literal predicate, no join) are refined by ``_refine``,
          then aggregated;
       4. one final tile-level sum merges 2+3.
 
-    Boundary points are O(perimeter/area) of the hits, so the
-    per-point join+refine traffic — the stage that saturates shared
-    memory bandwidth past ~8 threads on one box, and the dominant
-    shuffle at 10^12 rows — drops by that factor.
+    Boundary points are O(perimeter/area) of the hits, so the per-point
+    join+refine traffic drops by that factor. The pushdown needs the
+    cover's cells on the driver, so a side too big to collect counts
+    the joined rows instead.
 
-    NOTE: ``points`` is consumed by two subtrees (the pre-aggregate
-    and the boundary refine). Feed it a materialized source (parquet
-    scan / checkpointed stage output, as the flagship pipeline's sink
-    layout provides). r6 (VERDICT r5 #6): the contract is now
-    self-enforcing — a points plan that carries an opaque/expensive
-    stage (Python eval, generate, join, aggregate) is materialize()'d
-    once instead of silently recomputing per subtree; plain
-    scan/project/filter plans pass through untouched.
+    ``points`` is consumed by two subtrees, so a points plan holding an
+    opaque/expensive node (Python eval, generate, join, aggregate,
+    window) is materialize()'d once; plain scan/project/filter plans
+    pass through untouched.
     """
     from pyspark.sql import functions as F
 
-    spark = points.sparkSession
     extra = list(extra_keys or [])
-    try:
-        plan_str = points._jdf.queryExecution().optimizedPlan() \
-            .toString()
-    except Exception:
-        plan_str = ""
-    if any(m in plan_str for m in (
-            "PythonUDF", "Generate", "Join", "Aggregate", "Window")):
+    if _costly_to_recompute(points):
         points = materialize(points)
-    # r6 (VERDICT r5 #5): size-gated collect + auto-fallback — above
-    # the driver cap, compute per-(poly, tile) counts through the
-    # fully distributed join instead of collecting the polygon side.
-    # Same zero-job stats gate as spatial_join (a limit-probe collect
-    # measured +0.45 s/call even on tiny dims).
-    cap_bytes = int(spark.conf.get(
-        "spark.geospark.pip.maxDriverPolyBytes", str(256 << 20)))
-    max_driver = int(spark.conf.get(
-        "spark.geospark.pip.maxDriverPolygons", "100000"))
-    try:
-        est_bytes = int(polys_df._jdf.queryExecution().optimizedPlan()
-                        .stats().sizeInBytes())
-        if est_bytes >= 1 << 62:
-            # Long.MaxValue sentinel: stats UNKNOWN (LogicalRDD —
-            # createDataFrame locals, checkpoints). Fall through to
-            # the collect + row-count backstop; file-backed sides (the
-            # realistic huge case) always report real bytes.
-            est_bytes = 0
-    except Exception:
-        est_bytes = 0
-    if est_bytes <= cap_bytes:
-        prows = polys_df.select(poly_id_col, geom_col).collect()
-    if est_bytes > cap_bytes or len(prows) > max_driver:
-        out = spatial_join(points, polys_df, res=res, lat_col=lat_col,
-                           lon_col=lon_col, poly_id_col=poly_id_col,
-                           geom_col=geom_col, distributed=True)
-        tr = tile_res if tile_res is not None else (
-            res if res is not None else
-            _pick_resolution_distributed(polys_df, geom_col))
-        return (out.withColumn("cell",
-                               cell_encode(lat_col, lon_col, tr))
-                .groupBy(poly_id_col, "cell", *extra)
-                .agg(F.count(F.lit(1)).alias(count_col)))
-    polys = [(r[poly_id_col], r[geom_col]) for r in prows]
-    if res is None:
-        res = pick_resolution(polys)
+    side = _polygon_side(polys_df, res, poly_id_col, geom_col,
+                         distributed=False)
+    res = side.res
     if tile_res is None:
         tile_res = res
-    cover, ring_map = polygon_cover(polys, res)
-    full_rows = [(int(p), int(c)) for p, c, f in cover if f]
-    bnd_cells = sorted({int(c) for _p, c, f in cover if not f})
-    bnd_rows = [(int(p), int(c)) for p, c, f in cover if not f]
+    if side.rows is None:
+        matched = _refine(_join_cover(points, side, lat_col, lon_col, None),
+                          side, poly_id_col, lon_col, lat_col)
+        return (matched.withColumn("cell",
+                                   cell_encode(lat_col, lon_col, tile_res))
+                .groupBy(poly_id_col, "cell", *extra)
+                .agg(F.count(F.lit(1)).alias(count_col)))
+    bnd_cells = sorted({c for _p, c, f, *_ in side.rows if not f})
 
     pts = points.withColumn("_cell", cell_encode(lat_col, lon_col, res))
     if tile_res == res:
@@ -876,24 +706,22 @@ def pip_tile_counts(points, polys_df, *, res: int | None = None,
                              cell_encode(lat_col, lon_col, tile_res))
 
     parts = []
-    if full_rows:
-        full_df = spark.createDataFrame(
-            full_rows, schema=f"{poly_id_col} long, _cell long")
+    if any(f for _p, _c, f, *_ in side.rows):
+        full_df = side.cover.filter(F.col("_full")) \
+            .select(poly_id_col, "_cell")
         # phase 1+2: the only pass over every point is a partial
         # aggregate; the join runs on the reduced table
         pre = (pts.groupBy("_cell", "_tile", *extra)
                .agg(F.count(F.lit(1)).alias("_c")))
         parts.append(pre.join(F.broadcast(full_df), "_cell")
                      .select(poly_id_col, "_tile", *extra, "_c"))
-    if bnd_rows:
-        bnd_df = spark.createDataFrame(
-            bnd_rows, schema=f"{poly_id_col} long, _cell long")
+    if bnd_cells:
         # phase 3: InSet prefilter keeps the broadcast probe + ray-cast
         # off interior/unmatched points entirely
         bnd_pts = pts.filter(F.col("_cell").isin(bnd_cells))
-        hit = (bnd_pts.join(F.broadcast(bnd_df), "_cell")
-               .filter(refine_expr_col(ring_map, poly_id_col,
-                                       lon_col, lat_col))
+        joined = bnd_pts.join(
+            F.broadcast(side.cover.filter(~F.col("_full"))), "_cell")
+        hit = (_refine(joined, side, poly_id_col, lon_col, lat_col)
                .groupBy(poly_id_col, "_tile", *extra)
                .agg(F.count(F.lit(1)).alias("_c")))
         parts.append(hit)
@@ -940,10 +768,8 @@ def spatial_join_polygons(left, right, *, res: int | None = None,
     if res is None:
         res = min(_pick_resolution_distributed(left, l_geom),
                   _pick_resolution_distributed(right, r_geom))
-    # r6 (guide §2.6 — overlap independent jobs): each cover build runs
-    # a small detect+stats job; the two sides are independent, so
-    # submit them from driver threads and let the scheduler overlap
-    # the jobs instead of serializing two half-idle stages.
+    # the two cover builds each run a small detect+stats job: submit them
+    # from driver threads so the scheduler overlaps them
     from concurrent.futures import ThreadPoolExecutor
     with ThreadPoolExecutor(max_workers=2) as pool:
         fl = pool.submit(distributed_polygon_cover, left, res,
@@ -951,32 +777,18 @@ def spatial_join_polygons(left, right, *, res: int | None = None,
         fr = pool.submit(distributed_polygon_cover, right, res,
                          r_id, r_geom)
         lcov_raw, rcov_raw = fl.result(), fr.result()
-    lcov = (lcov_raw
-            .select(l_id, "_cell",
-                    F.col("_full").alias("_lf"),
-                    F.col("_rect").alias("_lr"),
-                    F.col("_bx0").alias("_lx0"),
-                    F.col("_by0").alias("_ly0"),
-                    F.col("_bx1").alias("_lx1"),
-                    F.col("_by1").alias("_ly1")))
-    rcov = (rcov_raw
-            .select(r_id, "_cell",
-                    F.col("_full").alias("_rf"),
-                    F.col("_rect").alias("_rr"),
-                    F.col("_bx0").alias("_rx0"),
-                    F.col("_by0").alias("_ry0"),
-                    F.col("_bx1").alias("_rx1"),
-                    F.col("_by1").alias("_ry1")))
-    # r6 restructure (guide §2.3 — aggregate before you shuffle, and
-    # decide with small rows): the rect x rect interval-overlap test
-    # and the both-full shortcut read only columns that are CONSTANT
-    # per (l, r) pair, so they are decided PER COVER ROW before the
-    # pair dedup. The pair aggregation then carries one boolean + the
-    # two rect flags instead of eight first()-carried coordinates
-    # (11 -> 4 shuffled columns), and a rect/full-decided pair needs
-    # no post-aggregation branch at all. Exactness is unchanged:
-    # closed interval overlap == exact rect x rect ST_Intersects, and
-    # a cell full in both polygons proves intersection.
+    def sided(cov, id_col, p):  # _full -> _lf, _bx0 -> _lx0, ...
+        return cov.select(id_col, "_cell", *(
+            F.col(c).alias(f"_{p}{a}") for c, a in (
+                ("_full", "f"), ("_rect", "r"), ("_bx0", "x0"),
+                ("_by0", "y0"), ("_bx1", "x1"), ("_by1", "y1"))))
+
+    lcov, rcov = sided(lcov_raw, l_id, "l"), sided(rcov_raw, r_id, "r")
+    # the rect x rect interval-overlap test and the both-full shortcut
+    # read only per-pair constants, so they are decided PER COVER ROW
+    # before the pair dedup (4 shuffled columns, not 11). Exact: closed
+    # interval overlap == rect x rect ST_Intersects, and a cell full in
+    # both polygons proves intersection.
     row_hit = ((F.col("_lf") & F.col("_rf"))
                | (F.col("_lr") & F.col("_rr")
                   & (F.col("_lx0") <= F.col("_rx1"))
@@ -993,15 +805,10 @@ def spatial_join_polygons(left, right, *, res: int | None = None,
     # where at least one side is non-rect and no shared full cell
     # proved the hit still need geometry work
     needs_geom = ~F.col("_hit") & ~(F.col("_lr") & F.col("_rr"))
-    l_stats = getattr(lcov_raw, "_geospark_cover_stats", None)
-    r_stats = getattr(rcov_raw, "_geospark_cover_stats", None)
-    all_rect = (l_stats is not None and l_stats["n_gen"] == 0
-                and r_stats is not None and r_stats["n_gen"] == 0)
-    if all_rect:
-        # both sides pure rectangles: every pair is decided by _hit at
-        # plan time — single aggregation, one consumer, nothing to
-        # checkpoint (the old shape eagerly materialized a 5M-row
-        # 11-column pair table to feed three branches)
+    if lcov_raw._geospark_cover_stats["n_gen"] == 0 \
+            and rcov_raw._geospark_cover_stats["n_gen"] == 0:
+        # both sides pure rectangles: _hit decides every pair, one
+        # aggregation, one consumer, nothing to checkpoint
         matched = pairs.filter(F.col("_hit")).select(l_id, r_id)
     else:
         # general residue present: the pair table feeds two branches —
@@ -1024,6 +831,29 @@ def spatial_join_polygons(left, right, *, res: int | None = None,
     raise ValueError(f"how={how!r}")
 
 
+def _explode_box_cells(df, x0, y0, x1, y1, res: int):
+    """One row of ``df`` per grid cell the box [x0, x1] x [y0, y1]
+    touches (clamped floor cell indices of its corners), keyed ``_cell``:
+    sequence() over the x/y index ranges, pure column expressions."""
+    from pyspark.sql import functions as F
+    n = 1 << res
+
+    def idx(v, off, span):
+        return F.least(F.lit(n - 1).cast("long"), F.greatest(
+            F.lit(0).cast("long"),
+            F.floor((v + F.lit(off)) / F.lit(span) * F.lit(n))))
+
+    return (df
+            .withColumn("_x", F.explode(F.sequence(idx(x0, 180.0, 360.0),
+                                                   idx(x1, 180.0, 360.0))))
+            .withColumn("_y", F.explode(F.sequence(idx(y0, 90.0, 180.0),
+                                                   idx(y1, 90.0, 180.0))))
+            .withColumn("_cell",
+                        F.shiftleft(F.lit(res).cast("long"), _RES_SHIFT)
+                        + F.shiftleft(F.col("_y"), res) + F.col("_x"))
+            .drop("_x", "_y"))
+
+
 def bbox_join(points, boxes, res: int, *,
               lat_col: str = "lat", lon_col: str = "lon",
               box_cols: tuple = ("xmin", "ymin", "xmax", "ymax"),
@@ -1037,24 +867,7 @@ def bbox_join(points, boxes, res: int, *,
     §2.2 with Catalyst free to pick broadcast vs shuffle."""
     from pyspark.sql import functions as F
     xmin, ymin, xmax, ymax = (F.col(c) for c in box_cols)
-    n = 1 << res
-
-    def cx(lon):
-        return F.least(F.lit(n - 1).cast("long"), F.greatest(
-            F.lit(0).cast("long"),
-            F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(n))))
-
-    def cy(lat):
-        return F.least(F.lit(n - 1).cast("long"), F.greatest(
-            F.lit(0).cast("long"),
-            F.floor((lat + F.lit(90.0)) / F.lit(180.0) * F.lit(n))))
-
-    b = (boxes
-         .withColumn("_x", F.explode(F.sequence(cx(xmin), cx(xmax))))
-         .withColumn("_y", F.explode(F.sequence(cy(ymin), cy(ymax))))
-         .withColumn("_cell", F.shiftleft(F.lit(res).cast("long"), _RES_SHIFT)
-                     + F.shiftleft(F.col("_y"), res) + F.col("_x"))
-         .drop("_x", "_y"))
+    b = _explode_box_cells(boxes, xmin, ymin, xmax, ymax, res)
     p = points.withColumn("_cell", cell_encode(lat_col, lon_col, res))
     out = p.join(b, "_cell").filter(
         (F.col(lon_col) >= xmin) & (F.col(lon_col) <= xmax)
@@ -1080,28 +893,9 @@ def distance_join(left, right, radius_deg: float, *, res: int = 6,
     is (radius/cell)^2-ish — pick ``res`` so the radius spans a few
     cells."""
     from pyspark.sql import functions as F
-    n = 1 << res
-
-    def cx(lon):
-        return F.least(F.lit(n - 1).cast("long"), F.greatest(
-            F.lit(0).cast("long"),
-            F.floor((lon + F.lit(180.0)) / F.lit(360.0) * F.lit(n))))
-
-    def cy(lat):
-        return F.least(F.lit(n - 1).cast("long"), F.greatest(
-            F.lit(0).cast("long"),
-            F.floor((lat + F.lit(90.0)) / F.lit(180.0) * F.lit(n))))
-
     r = F.lit(float(radius_deg))
-    lft = (left
-           .withColumn("_x", F.explode(F.sequence(
-               cx(F.col(l_lon) - r), cx(F.col(l_lon) + r))))
-           .withColumn("_y", F.explode(F.sequence(
-               cy(F.col(l_lat) - r), cy(F.col(l_lat) + r))))
-           .withColumn("_cell",
-                       F.shiftleft(F.lit(res).cast("long"), _RES_SHIFT)
-                       + F.shiftleft(F.col("_y"), res) + F.col("_x"))
-           .drop("_x", "_y"))
+    lon, lat = F.col(l_lon), F.col(l_lat)
+    lft = _explode_box_cells(left, lon - r, lat - r, lon + r, lat + r, res)
     rgt = right.withColumn("_cell", cell_encode(r_lat, r_lon, res))
     dlat = F.col(l_lat) - F.col(r_lat)
     dlon = F.col(l_lon) - F.col(r_lon)
@@ -1201,7 +995,6 @@ def knn_join(queries, points, k: int, *, res: int = 8,
     # run on the point side's scan partitions — a small single-row-group
     # point table serializes the whole chain onto 1-2 cores (measured
     # 4.3 s single-threaded at sf1; 32-core after the repair)
-    from .par import fanout_repartition
     pts = fanout_repartition(points) \
         .withColumn("_pcell", cell_encode(p_lat, p_lon, res))
     # guarantee radius of a ring r (degrees): r cells in the *narrower*
@@ -1410,7 +1203,6 @@ def accessibility_2sfca(demand, supply, radius_deg: float, *,
     dense frame is wanted). -> (d_id, n_supp, access_ppm)."""
     from pyspark.sql import functions as F
 
-    from ..materialize import materialize
     pairs = materialize(distance_join(
         supply.select(F.col(s_id), F.col(cap_col),
                       F.col(s_lat).alias("_slat"),

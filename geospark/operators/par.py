@@ -30,12 +30,27 @@ FANOUT_MAX_BYTES_CONF = "spark.geospark.fanout.repartitionMaxBytes"
 _DEFAULT_MAX_BYTES = 2 << 30  # 2 GiB
 
 
+def plan_bytes(df) -> int | None:
+    """The optimizer's size estimate of ``df`` in bytes, read from the
+    plan statistics without running a job; ``None`` when it is unknown.
+    A plan over an RDD (``createDataFrame`` from a Python list or an
+    RDD) reports Long.MaxValue, which means unknown, not huge; no real
+    input reaches 2^62 bytes."""
+    try:
+        size = int(df._jdf.queryExecution().optimizedPlan()
+                   .stats().sizeInBytes())
+    except Exception:  # estimation is advisory only — never fail a plan
+        return None
+    return None if size >= 1 << 62 else size
+
+
 def fanout_repartition(df, *, force: bool = False):
     """Round-robin repartition ``df`` to ``defaultParallelism`` iff its
     planned partition count is below it AND its estimated size is under
-    the cap. Row content is unchanged (round-robin only moves rows);
-    Spark's sort-before-repartition keeps the assignment deterministic
-    under task retry.
+    the cap. A size the optimizer does not know cannot exceed the cap,
+    so the partition-count gate alone decides. Row content is unchanged
+    (round-robin only moves rows); Spark's sort-before-repartition keeps
+    the assignment deterministic under task retry.
 
     ``force=True`` skips the partition-count gate (size cap still
     applies): planned splits over-report EFFECTIVE scan parallelism
@@ -48,12 +63,11 @@ def fanout_repartition(df, *, force: bool = False):
     try:
         if not force and df.rdd.getNumPartitions() >= par:
             return df
-        size = int(df._jdf.queryExecution().optimizedPlan()
-                   .stats().sizeInBytes())
-    except Exception:  # estimation is advisory only — never fail a plan
+    except Exception:  # advisory only — never fail a plan
         return df
+    size = plan_bytes(df)
     cap = int(spark.conf.get(FANOUT_MAX_BYTES_CONF,
                              str(_DEFAULT_MAX_BYTES)))
-    if size > cap:
+    if size is not None and size > cap:
         return df
     return df.repartition(par)

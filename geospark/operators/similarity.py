@@ -148,25 +148,6 @@ def ann_topk(emb_df, query_vec, k: int = 10, *, id_col: str = "vec_id",
             .limit(k))
 
 
-def sign_bucket_col(emb, n_bits: int):
-    """Axis-aligned sign-LSH bucket: bit i = (emb[i] > 0). The simplest
-    member of the hyperplane family — deterministic, SQL-reproducible,
-    and adequate for bucketing roughly isotropic embeddings."""
-    from pyspark.sql import functions as F
-    out = F.lit(0).cast("long")
-    for i in range(n_bits):
-        out = out + F.when(F.element_at(emb, i + 1) > 0,
-                           F.lit(1 << i).cast("long")).otherwise(F.lit(0))
-    return out
-
-
-def sign_bucket_sql(emb_expr: str, n_bits: int) -> str:
-    terms = [f"CASE WHEN {emb_expr}[{i + 1}] > 0 THEN "
-             f"CAST({1 << i} AS BIGINT) ELSE 0 END"
-             for i in range(n_bits)]
-    return "(" + " + ".join(terms) + ")"
-
-
 # ---------------------------------------------------------------------------
 # banded multi-table hyperplane LSH (the scale path for near-dup)
 # ---------------------------------------------------------------------------

@@ -38,11 +38,19 @@ def test_polygon_roundtrip_spark(spark, coord_type):
     assert got == exp
 
 
-@pytest.mark.parametrize("coord_type", ["separate", "interleaved"])
-def test_point_roundtrip_spark(spark, coord_type):
+_POINT_WKTS = ["POINT (0 1)", "POINT (2.5 -3.5)", "POINT EMPTY", None]
+_POINTS_AFTER_NULL = ["POINT (1 2)", None, "POINT (3 4)"]
+
+
+@pytest.mark.parametrize("coord_type, wkts", [
+    ("separate", _POINT_WKTS), ("interleaved", _POINT_WKTS),
+    ("separate", _POINTS_AFTER_NULL), ("interleaved", _POINTS_AFTER_NULL),
+], ids=["separate", "interleaved", "separate-null-first",
+        "interleaved-null-first"])
+def test_point_roundtrip_spark(spark, coord_type, wkts):
     from geospark.functions.encoding import from_geoarrow, to_geoarrow
-    wkts = ["POINT (0 1)", "POINT (2.5 -3.5)", "POINT EMPTY", None]
-    df = _wkb_df(spark, wkts)
+    # one partition: every slot in one Arrow batch, NULLs among points
+    df = _wkb_df(spark, wkts).coalesce(1)
     nested = to_geoarrow(df, "wkb", "point", coord_type=coord_type)
     back = from_geoarrow(nested, "geom", "point")
     got = {r.id: r.wkb for r in back.collect()}

@@ -49,15 +49,17 @@ def test_pip_join_is_broadcast_and_jvm_only(spark):
     assert "MapInPandas" not in p
 
 
-def test_pip_join_udf_mode_is_single_pass(spark):
+def test_pip_join_udf_mode_is_single_pass(spark, many_edge_zone):
     # r5: the udf tier is a SINGLE `_full OR udf` filter (NULL-gated
     # poly_id makes interior rows O(1) in the batch) — no
-    # interior/boundary Union re-executing the upstream per tier
+    # interior/boundary Union re-executing the upstream per tier. A zone
+    # side past the expression refine's edge limit takes the udf tier.
     from geospark.operators.joins import spatial_join
     import geospark.queries as q
     pts = q._cust_points(spark, SF)
-    df = spatial_join(pts, q.fixed_zones_df(spark), res=q.RES_COARSE,
-                      refine_mode="udf")
+    zones = q.fixed_zones_df(spark).unionByName(spark.createDataFrame(
+        [many_edge_zone], "zone_id long, geom_wkb binary"))
+    df = spatial_join(pts, zones, res=q.RES_COARSE)
     p = _plan(spark, df)
     assert "BroadcastHashJoin" in p
     assert "ArrowEvalPython" in p  # the refine
@@ -215,29 +217,22 @@ def test_zorder_key_is_codegen_bit_math(spark):
     assert "* Project" in p
 
 
-def test_salted_join_partitions_on_cell_and_salt(spark):
-    """salt>0 on the non-broadcast path must replicate the cover S ways
-    and key BOTH shuffle sides by (_cell, _salt) — the hot-cell rows
-    then spread over S reducers instead of one."""
+def test_shuffled_cover_join_partitions_on_cell(spark):
+    """broadcast_cover=False must key BOTH shuffle sides of the cover
+    join by _cell (AQE skew-join then splits hot cells)."""
     import geospark.queries as q
     from geospark.operators.joins import spatial_join
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     # the tiny test cover would auto-broadcast (no shuffle at all);
-    # at the scale the salted path exists for, the cover exceeds the
-    # threshold — force the shuffle shape the test is about
+    # force the shuffle shape the test is about
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         pts = q._cust_points(spark, SF)
         out = spatial_join(pts, q.fixed_zones_df(spark), res=6,
-                           broadcast_cover=False, salt=8)
+                           broadcast_cover=False)
         p = _plan(spark, out)
-        assert "_salt" in p
-        # both join inputs hash-partition on the composite key
         assert p.count("hashpartitioning(_cell") >= 2
-        assert p.count("_salt") >= 4  # key on probe + build exchanges
-        unsalted = spatial_join(pts, q.fixed_zones_df(spark), res=6,
-                                broadcast_cover=False, salt=0)
-        assert "_salt" not in _plan(spark, unsalted)
+        assert "BroadcastHashJoin" not in p
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 

@@ -171,7 +171,8 @@ class TestPolyJoin:
 
     def test_rect_fast_path_equals_general(self, spark):
         """Force the general refine (degenerate 6-point 'rects' evade
-        _rect_of) and compare to the rect fast path on the same boxes."""
+        the rectangle detection) and compare to the rect fast path on
+        the same boxes."""
         from pyspark.sql import functions as F
         from geospark.functions.geometry import st_geomfromtext
         from geospark.operators.joins import spatial_join_polygons

@@ -357,7 +357,7 @@ class TestJvmRectCovering:
         for r in cov:
             by_pid.setdefault(r["pid"], set()).add(r["_rect"])
         assert by_pid[1] == {True}
-        assert by_pid[2] == {False}   # collinear 6-pt evades _rect_of
+        assert by_pid[2] == {False}   # collinear 6-pt is not a rect
         assert by_pid[3] == {False}
         assert 4 not in by_pid        # null covers nothing
         # rect corners carried for the JVM refine tier

@@ -151,6 +151,85 @@ class TestPipTileCountsMaterializeGuard:
                         q.fixed_zones_df(spark), res=6)
         assert sum(calls) == 0
 
+    def test_literal_naming_a_node_passes_through(self, spark,
+                                                  monkeypatch):
+        """The guard matches plan node classes: a string literal that
+        spells one (``Join AS src`` in the plan text) is no join."""
+        from geospark.operators.joins import pip_tile_counts
+        calls = self._count_materialize(monkeypatch)
+        pts = _pts(spark, 500).withColumn("src", F.lit("Join"))
+        out = pip_tile_counts(pts, _boxes(spark, 40), res=6)
+        assert sum(calls) == 0
+        assert out.count() > 0
+
+
+def _stars(spark, n, k):
+    """n star polygons of k edges each (zone ids 0..n-1)."""
+    from geospark.kernels.geom import parse_wkt
+    from geospark.kernels.wkb import write_wkb
+    rows = []
+    for i in range(n):
+        cx, cy = -120.0 + 60.0 * i, 10.0 * (i % 3) - 10.0
+        t = np.linspace(0.0, 2.0 * np.pi, k, endpoint=False)
+        r = np.where(np.arange(k) % 2 == 0, 25.0, 15.0)
+        xs, ys = cx + r * np.cos(t), cy + r * np.sin(t)
+        ring = ", ".join(f"{x!r} {y!r}" for x, y in zip(xs, ys))
+        rows.append((i, write_wkb(parse_wkt(
+            f"POLYGON (({ring}, {xs[0]!r} {ys[0]!r}))"))))
+    return spark.createDataFrame(rows, "zone_id long, geom_wkb binary")
+
+
+class TestManyEdgeSide:
+    def test_pip_tile_counts_refines_by_udf(self, spark, monkeypatch):
+        """A collected side past the expression refine's edge limit
+        refines through the shared UDF rule (no unrolled CASE) and
+        still equals tile_counts over the plain join."""
+        import geospark.operators.joins as J
+        from geospark.operators.tiles import tile_counts
+
+        def unrolled_case(*a, **kw):
+            raise AssertionError("expression refine on a 200-edge side")
+
+        monkeypatch.setattr(J, "refine_expr_col", unrolled_case)
+        pts, stars = _pts(spark), _stars(spark, 2, 100)
+        got_df = J.pip_tile_counts(pts, stars, res=6)
+        plan = got_df._sc._jvm.PythonSQLUtils.explainString(
+            got_df._jdf.queryExecution(), "formatted")
+        assert "ArrowEvalPython" in plan
+        got = {(r.zone_id, r.cell): r.n_docs for r in got_df.collect()}
+        want = {(r.zone_id, r.cell): r.n_docs for r in tile_counts(
+            J.spatial_join(pts, stars, res=6), 6,
+            extra_keys=["zone_id"]).collect()}
+        assert got == want and len(want) > 0
+
+
+class TestSemiAntiRowId:
+    @pytest.mark.parametrize("distributed", [False, True])
+    def test_caller_rid_column_is_not_trusted(self, spark, distributed):
+        """A caller column named _rid is data, not a row id: with every
+        _rid equal, semi + anti must still split the input exactly as a
+        brute-force ray cast does, and _rid passes through unchanged."""
+        from geospark.kernels.ops import point_in_rings
+        from geospark.kernels.wkb import parse_wkb
+        from geospark.operators.joins import spatial_join
+        pts = _pts(spark, 2000).withColumn("_rid", F.lit(7).cast("long"))
+        boxes = _boxes(spark, 20)
+        rings = [parse_wkb(r.geom_wkb).rings for r in boxes.collect()]
+        p = pts.toPandas()
+        inside = np.zeros(len(p), dtype=bool)
+        for rr in rings:
+            inside |= point_in_rings(p["lon"].to_numpy(),
+                                     p["lat"].to_numpy(), rr)
+        want = set(p["pid"][inside])
+        semi = spatial_join(pts, boxes, res=6, how="left_semi",
+                            distributed=distributed).collect()
+        anti = spatial_join(pts, boxes, res=6, how="left_anti",
+                            distributed=distributed).collect()
+        assert {r.pid for r in semi} == want and 0 < len(want) < len(p)
+        assert {r.pid for r in anti} == set(p["pid"]) - want
+        assert len(semi) + len(anti) == len(p)
+        assert {r["_rid"] for r in semi + anti} == {7}
+
 
 class TestPolyJoinMixedTiers:
     def test_mixed_rect_triangle_matches_brute_force(self, spark):
@@ -205,6 +284,27 @@ class TestFanoutRepartition:
         par = spark.sparkContext.defaultParallelism
         df = spark.range(1000).repartition(par)
         assert fanout_repartition(df) is df
+
+    def test_fires_on_unknown_size_whatever_the_cap(self, spark):
+        """An RDD-backed input has no size estimate, so the byte cap
+        cannot apply: the partition-count gate alone decides."""
+        from geospark.operators.par import fanout_repartition, plan_bytes
+        df = spark.createDataFrame([(i,) for i in range(100)],
+                                   "id long").coalesce(1)
+        assert plan_bytes(df) is None
+        spark.conf.set("spark.geospark.fanout.repartitionMaxBytes", "1")
+        try:
+            out = fanout_repartition(df)
+        finally:
+            spark.conf.unset("spark.geospark.fanout.repartitionMaxBytes")
+        assert out.rdd.getNumPartitions() == \
+            spark.sparkContext.defaultParallelism
+        assert sorted(r.id for r in out.collect()) == list(range(100))
+
+    def test_plan_bytes_known_size(self, spark):
+        from geospark.operators.par import plan_bytes
+        size = plan_bytes(spark.read.parquet(f"{SF}/customer.parquet"))
+        assert isinstance(size, int) and 0 < size < 1 << 40
 
     def test_noop_above_byte_cap(self, spark):
         from geospark.operators.par import fanout_repartition

@@ -107,29 +107,34 @@ def test_spatial_join_resolution_invariance(spark, geo):
     assert a == b
 
 
-def test_spatial_join_salted_shuffle_path(spark, geo):
+def test_spatial_join_shuffled_cover_path(spark, geo):
     from geospark.operators.joins import spatial_join
     from geospark.sources.synth import zones_df
     zones = zones_df(spark)
     a = set((r.url, r.zone_id) for r in
             spatial_join(geo, zones, res=8).collect())
     b = set((r.url, r.zone_id) for r in
-            spatial_join(geo, zones, res=8, broadcast_cover=False,
-                         salt=4).collect())
+            spatial_join(geo, zones, res=8,
+                         broadcast_cover=False).collect())
     assert a == b
 
 
-def test_spatial_join_refine_modes_agree(spark, geo):
+def test_spatial_join_refine_modes_agree(spark, geo,
+                                         many_edge_zone):
     """The codegen'd expression refine and the pandas-UDF refine are the
-    same arithmetic — outputs must be identical."""
+    same arithmetic — outputs must be identical. One extra 200-edge
+    zone pushes the side past the expression refine's edge limit."""
     from geospark.operators.joins import spatial_join
     from geospark.sources.synth import zones_df
-    zones = zones_df(spark)
+    zones = zones_df(spark).select("zone_id", "geom_wkb")
+    many = zones.unionByName(spark.createDataFrame(
+        [many_edge_zone], "zone_id long, geom_wkb binary"))
     a = set((r.url, r.zone_id) for r in
-            spatial_join(geo, zones, res=8, refine_mode="expr").collect())
+            spatial_join(geo, zones, res=8).collect())
     b = set((r.url, r.zone_id) for r in
-            spatial_join(geo, zones, res=8, refine_mode="udf").collect())
-    assert a == b
+            spatial_join(geo, many, res=8).collect()
+            if r.zone_id != many_edge_zone[0])
+    assert a == b and len(a) > 0
 
 
 def test_spatial_join_semi_anti_partition(spark, geo):

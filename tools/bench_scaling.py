@@ -191,7 +191,7 @@ Generated {time.strftime('%Y-%m-%d %H:%M:%S')}.
 
 Pinned configs: spark.sql.shuffle.partitions = cpus;
 spark.sql.execution.arrow.maxRecordsPerBatch = 65536; AQE on
-(coalescePartitions, skewJoin); broadcast cover join; refine_mode=auto
+(coalescePartitions, skewJoin); broadcast cover join; automatic refine
 (expression refine, zero Python in the pipeline); input materialized as
 128 parquet files (scan parallelism is capped by file count otherwise);
 -Xms=-Xmx + AlwaysPreTouch (heap page-faulting otherwise contaminates

@@ -1,12 +1,11 @@
 """Skew evidence under load (r3 VERDICT item 7): one res-8 cell holds
-~30% of the points (hot-city shape); the salted shuffle join and the
-distributed-covering path must stay within ~1.5x of the same join on
-uniform data of identical size.
+~30% of the points (hot-city shape); the shuffled cover join (AQE
+skew-join) and the distributed-covering path must stay within ~1.5x of
+the same join on uniform data of identical size.
 
 Protocol: materialize a skewed and a uniform table of N rows once
 (untimed), then time spatial_join over each through
-  * shuffle : non-broadcast equi-join, salt=0 (the skew victim)
-  * salted  : non-broadcast equi-join, salt=8 + AQE skew-join
+  * shuffle : non-broadcast equi-join + AQE skew-join (the skew victim)
   * distributed : executor-covering path (broadcast cover)
 min-of-3 per combination. Appends results to BENCH/SKEW.md and prints
 one JSON line.
@@ -23,7 +22,6 @@ import time
 
 N = int(os.environ.get("SPARK_GRAFT_SKEW_ROWS", "3000000"))
 HOT_FRAC = 0.3
-SALT = 8
 
 
 def build_session(cpus: int = 32):
@@ -101,36 +99,31 @@ def main() -> None:
     spark = build_session()
     spark.sparkContext.setLogLevel("ERROR")
     zdf = zones(spark)
-    out = {"rows": N, "hot_frac": HOT_FRAC, "salt": SALT, "paths": {}}
+    out = {"rows": N, "hot_frac": HOT_FRAC, "paths": {}}
     for tag, skewed in (("uniform", False), ("skewed", True)):
         src = materialize(spark, skewed)
         pts = spark.read.parquet(src)
 
         def shuffle_join():
-            return spatial_join(pts, zdf, res=8, broadcast_cover=False,
-                                salt=0).groupBy("zone_id").count().count()
-
-        def salted_join():
-            return spatial_join(pts, zdf, res=8, broadcast_cover=False,
-                                salt=SALT).groupBy("zone_id").count() \
-                .count()
+            return spatial_join(pts, zdf, res=8, broadcast_cover=False) \
+                .groupBy("zone_id").count().count()
 
         def distributed_join():
             return spatial_join(pts, zdf, res=8, distributed=True) \
                 .groupBy("zone_id").count().count()
 
         out["paths"][tag] = {
-            "shuffle_salt0": timed(shuffle_join),
-            "salted": timed(salted_join),
+            "shuffle": timed(shuffle_join),
             "distributed": timed(distributed_join),
         }
     u, s = out["paths"]["uniform"], out["paths"]["skewed"]
     out["skew_over_uniform"] = {
         k: round(s[k] / u[k], 3) for k in u}
-    out["salted_within_1_5x"] = out["skew_over_uniform"]["salted"] <= 1.5
+    out["within_1_5x"] = {
+        k: r <= 1.5 for k, r in out["skew_over_uniform"].items()}
     os.makedirs("/root/repo/BENCH", exist_ok=True)
     with open("/root/repo/BENCH/SKEW.md", "a") as f:
-        f.write(f"\n## skew run rows={N} hot={HOT_FRAC} salt={SALT}\n\n")
+        f.write(f"\n## skew run rows={N} hot={HOT_FRAC}\n\n")
         f.write("| path | uniform s | skewed s | ratio |\n|---|---|---|---|\n")
         for k in u:
             f.write(f"| {k} | {u[k]} | {s[k]} | "
