@@ -134,18 +134,19 @@ def lsh_candidate_pairs(sig_df, id_col: str = "doc_id", bands: int = 4,
                         rows_per_band: int = 4,
                         max_bucket: int = 1000):
     """Signature table -> distinct candidate pairs (a < b) sharing at
-    least one LSH band. ``max_bucket`` caps pathological buckets (mass
+    least one LSH band. ``max_bucket`` drops pathological buckets (mass
     boilerplate) so one bucket can't produce O(n^2) pairs on a single
-    task — capped buckets are dropped and logged in the plan via a
-    filter, the standard scale guard.
+    task — a bucket over the cap is removed by a filter in the plan.
 
     r6 shape (guide §2.4 — remove shuffles outright): ONE groupBy
-    collects each bucket's (size-capped, sorted) id array, and the
-    a < b pairs explode from the array in place. The old shape paid
-    three exchanges of the band table (bucket-size aggregate, the
-    size-filter join back, the bucket self-join); the in-bucket pair
-    volume is identical — max_bucket bounds the collected array
-    exactly as it bounded the self-join output."""
+    collects each bucket's whole id list (``collect_list``: unordered,
+    uncapped), and the a < b pairs explode from the list in place, so
+    no order is needed. The old shape paid three exchanges of the band
+    table (bucket-size aggregate, the size-filter join back, the bucket
+    self-join); the in-bucket pair volume is identical. ``max_bucket``
+    filters only AFTER each list is built: it bounds the pairs exploded
+    from a hot bucket, not the list itself, which is gathered in full
+    in one aggregation buffer."""
     from pyspark.sql import functions as F
     b = band_rows(sig_df, id_col, bands, rows_per_band)
     buckets = (b.groupBy("band", "bh")

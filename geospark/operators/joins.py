@@ -112,8 +112,8 @@ def _cover_rows(polys: list[tuple[int, bytes | None]], res: int,
     return rows, ring_map
 
 
-def _res_for_area(med: float | None, min_res: int, max_res: int,
-                  target_cells_per_poly: int) -> int:
+def _res_for_area(med: float | None, min_res: int = 4, max_res: int = 12,
+                  target_cells_per_poly: int = 64) -> int:
     """Smallest res whose cells per median envelope area reach the
     target — balances explode factor (broadcast size) against
     candidates-per-cell (refine cost)."""
@@ -148,17 +148,12 @@ def pick_resolution(polys: list[tuple[int, bytes | None]],
 def _pick_resolution_distributed(polys_df, geom_col: str,
                                  min_res: int = 4, max_res: int = 12,
                                  target_cells_per_poly: int = 64) -> int:
-    """pick_resolution without collecting geometry: one agg job over
-    envelope areas (median via percentile_approx)."""
-    from pyspark.sql import functions as F
-
-    from ..functions.geometry import st_envelope
-    env = polys_df.select(st_envelope(geom_col).alias("e"))
-    area = ((F.col("e.xmax") - F.col("e.xmin"))
-            * (F.col("e.ymax") - F.col("e.ymin")))
-    row = env.select(area.alias("a")).filter(F.col("a") > 0) \
-        .agg(F.percentile_approx("a", 0.5).alias("med")).collect()[0]
-    med = float(row["med"]) if row["med"] is not None else None
+    """pick_resolution without collecting geometry: the cover's own
+    detection pass (``_detect``) with the stats aggregation over it
+    (``_side_stats``), whose median envelope area picks the resolution.
+    ``distributed_polygon_cover``'s callers pick from that same
+    aggregation inside their one pass, so both always agree."""
+    med = _side_stats(_detect(polys_df, geom_col), None)["med_area"]
     return _res_for_area(med, min_res, max_res, target_cells_per_poly)
 
 
@@ -218,12 +213,40 @@ def make_refine_udf(ring_map: dict[int, list[list[np.ndarray]]]):
     return refine
 
 
+def _envelope_areas(wkb: pd.Series, pb, valid) -> np.ndarray:
+    """Envelope area ``(xmax - xmin) * (ymax - ymin)`` of every row of a
+    WKB batch, equal to what ``st_envelope`` gives. Rows the LE polygon
+    parser decoded (``pb``) reduce over their coordinates in place; the
+    rows it rejects (multipolygons, big-endian) take the general codec.
+    A row without an envelope (NULL, EMPTY, all-NaN) reports 0, which
+    the median's ``area > 0`` filter leaves out."""
+    from ..kernels.ops import geom_envelope
+    area = np.zeros(len(wkb))
+    # coordinates are grouped by polygon (rings sorted by polygon)
+    cpoly = np.repeat(pb.poly_of_ring, pb.ring_rows)
+    if cpoly.size:
+        has, first = np.unique(cpoly, return_index=True)
+        area[has] = ((np.fmax.reduceat(pb.xs, first)
+                      - np.fmin.reduceat(pb.xs, first))
+                     * (np.fmax.reduceat(pb.ys, first)
+                        - np.fmin.reduceat(pb.ys, first)))
+    rest = ~pb.ok if valid is None else ~pb.ok & valid
+    for i in np.nonzero(rest)[0]:
+        ex0, ey0, ex1, ey1 = geom_envelope(parse_wkb(bytes(wkb.iat[i])))
+        area[i] = (ex1 - ex0) * (ey1 - ey0)
+    area[np.isnan(area)] = 0.0
+    return area
+
+
 def _make_rect_info_udf():
-    """geom_wkb -> struct(rect, x0, y0, x1, y1): fully vectorized
-    axis-aligned-rectangle detection over the batch WKB buffers
-    (structural, no float tolerance: 1 ring, 5 rows, closed, 2 distinct
-    x, 2 distinct y, every edge axis-aligned). One cheap Arrow pass over
-    the polygon side replaces per-polygon Python covering for the
+    """geom_wkb -> struct(rect, x0, y0, x1, y1, area): the one Python
+    read of a distributed polygon side. Fully vectorized axis-aligned-
+    rectangle detection over the batch WKB buffers (structural, no
+    float tolerance: 1 ring, 5 rows, closed, 2 distinct x, 2 distinct
+    y, every edge axis-aligned), plus each polygon's envelope area
+    (``_envelope_areas``) from the same decoded buffers, which the stats
+    aggregation turns into the cover resolution. One cheap Arrow pass
+    over the polygon side replaces per-polygon Python covering for the
     rectangle-dominant case. Big-endian / EWKB-exotic rectangles fall
     outside the LE fast parser and are reported rect=False — they take
     the (exact, slower) general covering tier instead; output is
@@ -234,7 +257,7 @@ def _make_rect_info_udf():
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("struct<rect:boolean,x0:double,y0:double,"
-                "x1:double,y1:double>")
+                "x1:double,y1:double,area:double>")
     def info(wkb: pd.Series) -> pd.DataFrame:
         from ..functions.geometry import _series_to_wkb_buffers
         from ..kernels.wkb import parse_polygon_wkb_buffer
@@ -273,7 +296,8 @@ def _make_rect_info_udf():
             x0[sel] = xmin[good]; x1[sel] = xmax[good]
             y0[sel] = ymin[good]; y1[sel] = ymax[good]
         return pd.DataFrame({"rect": rect, "x0": x0, "y0": y0,
-                             "x1": x1, "y1": y1})
+                             "x1": x1, "y1": y1,
+                             "area": _envelope_areas(wkb, pb, val)})
 
     return info
 
@@ -295,24 +319,81 @@ def _cell_ranges(x0, y0, x1, y1, n: int):
             F.least(nmax, F.floor((y1 + 90.0) / 180.0 * n).cast("long")))
 
 
-def distributed_polygon_cover(polys_df, res: int,
-                              poly_id_col: str = "zone_id",
-                              geom_col: str = "geom_wkb"):
-    """Covering computed ON EXECUTORS, in the cover schema: the driver
-    never collects geometry, so a million-polygon side scales out.
+def _detect(polys_df, geom_col: str, *keep: str):
+    """The one Python read of a distributed polygon side: ``keep``
+    columns plus the ``_make_rect_info_udf`` struct ``_ri``.
+    fanout_repartition spreads a few-file side over the cores."""
+    from pyspark.sql import functions as F
+    return fanout_repartition(polys_df).select(
+        *keep, _make_rect_info_udf()(F.col(geom_col)).alias("_ri"))
 
-    Two tiers (r5): axis-aligned rectangles — the typical LARGE polygon
-    side (parcels, tiles, boxes) — are detected by one vectorized Arrow
-    pass and covered with PURE JVM column expressions (sequence +
-    explode over the closed-intersect cell index ranges, the same
-    integer cell ids as cells.cell_encode); only the non-rectangular
-    residue pays the per-polygon Python covering (mapInPandas,
-    repartitioned to the full core budget). At sf1 (200k boxes) the
-    all-Python covering was 9.7 s of the join's 10.3 s. Closed-intersect
-    ranges match the Python covering's closed bbox overlap, which
-    poly_join's shared-boundary semantics relies on; ``_full`` is the
-    exact cell-inside-rect test (left/bottom closed, right/top open, the
-    convention of the rect refine)."""
+
+def _rect_rows(res: int):
+    """Exploded row count of each rectangle's cover at ``res`` (0 for a
+    non-rectangle), from the same ranges the cover explodes."""
+    from pyspark.sql import functions as F
+    ix0, ix1, iy0, iy1 = _cell_ranges(
+        F.col("_ri.x0"), F.col("_ri.y0"), F.col("_ri.x1"),
+        F.col("_ri.y1"), 1 << res)
+    zero = F.lit(0).cast("long")
+    return F.when(F.col("_ri.rect"),
+                  F.greatest(zero, ix1 - ix0 + 1)
+                  * F.greatest(zero, iy1 - iy0 + 1)).otherwise(F.lit(0))
+
+
+def _side_stats(info, res: int | None) -> dict:
+    """ONE tiny aggregation over the detection output: polygon count,
+    non-rect residue count, the median envelope area that picks the
+    resolution (``percentile_approx`` over ``area > 0``) and, when
+    ``res`` is given, the EXACT exploded row count of the rect cover
+    (``rect_rows``; None otherwise)."""
+    from pyspark.sql import functions as F
+    area = F.col("_ri.area")
+    aggs = [F.count(F.lit(1)).alias("_np"),
+            F.sum(F.when(F.col("_ri.rect"), 0).otherwise(1)).alias("_ng"),
+            F.percentile_approx(F.when(area > 0, area), 0.5).alias("_med")]
+    if res is not None:
+        aggs.append(F.sum(_rect_rows(res)).alias("_rr"))
+    st = info.agg(*aggs).collect()[0]
+    med = st["_med"]
+    return {"n_polys": int(st["_np"]),
+            "n_gen": int(st["_ng"] or 0),
+            "med_area": None if med is None else float(med),
+            "rect_rows": int(st["_rr"] or 0) if res is not None else None}
+
+
+def _detect_and_stats(polys_df, res: int | None, poly_id_col: str,
+                      geom_col: str, rect_rows: bool = True):
+    """First step of the distributed cover -> (info, res, stats): the
+    frozen detection output, the resolution (picked from the stats'
+    median envelope area when ``res`` is None) and ``_side_stats``.
+
+    Freezes the one-row-per-polygon DETECTION output, not the exploded
+    cover: the Python pass runs once however many branches read the
+    cover, and the pure-JVM explode stays inline in the consumer's plan
+    (scan -> explode -> join fuses into one codegen stage). The LAZY,
+    geometry-free checkpoint is filled by the stats aggregation in the
+    same job. With ``res`` None and ``rect_rows`` set, the rect cover's
+    row count at the picked resolution comes from a second, JVM-only
+    aggregation over the frozen info in one task (no exchange)."""
+    from pyspark.sql import functions as F
+    info = materialize(_detect(polys_df, geom_col, poly_id_col),
+                       eager=False)
+    stats = _side_stats(info, res)
+    if res is None:
+        res = _res_for_area(stats["med_area"])
+        if rect_rows:
+            rr = info.coalesce(1).agg(F.sum(_rect_rows(res))).collect()
+            stats["rect_rows"] = int(rr[0][0] or 0)
+    return info, res, stats
+
+
+def _cover_from_info(polys_df, info, res: int, stats: dict,
+                     poly_id_col: str, geom_col: str):
+    """Second step of the distributed cover: the lazy rect explode and,
+    unless every polygon is a rectangle, the union with the general
+    tier's Python covering (which re-joins geometry by id from the
+    source). Submits no job."""
     from pyspark.sql import functions as F
     cols = [poly_id_col, *COVER_COLS]
 
@@ -324,19 +405,6 @@ def distributed_polygon_cover(polys_df, res: int,
                 res, carry_wkb=True)
             if rows:
                 yield pd.DataFrame(rows, columns=cols)
-
-    # Freeze the one-row-per-polygon DETECTION output, not the exploded
-    # cover: the Python detect pass runs once however many branches
-    # read the cover, and the pure-JVM explode stays inline in the
-    # consumer's plan (scan -> explode -> join fuses into one codegen
-    # stage). fanout_repartition spreads a few-file side over the cores;
-    # the LAZY, geometry-free checkpoint is filled by the stats agg
-    # below in the same job, and the general tier re-joins geometry by
-    # id from the source.
-    info = materialize(fanout_repartition(polys_df).select(
-        poly_id_col,
-        _make_rect_info_udf()(F.col(geom_col)).alias("_ri")),
-        eager=False)
 
     n = 1 << res
     x0, y0 = F.col("_bx0"), F.col("_by0")
@@ -369,38 +437,53 @@ def distributed_polygon_cover(polys_df, res: int,
                     F.lit(True).alias("_rect"),
                     "_bx0", "_by0", "_bx1", "_by1",
                     F.lit(None).cast("binary").alias("_gwkb")))
-
-    gen = (info.filter(~F.col("_ri.rect")).select(poly_id_col)
-           .join(polys_df.select(poly_id_col, geom_col), poly_id_col))
-    # ONE tiny agg over the frozen info: polygon count, non-rect residue
-    # count and the EXACT exploded row count of the rect cover.
-    six0, six1, siy0, siy1 = _cell_ranges(
-        F.col("_ri.x0"), F.col("_ri.y0"), F.col("_ri.x1"),
-        F.col("_ri.y1"), n)
-    zero = F.lit(0).cast("long")
-    rect_rows = F.when(
-        F.col("_ri.rect"),
-        F.greatest(zero, six1 - six0 + 1)
-        * F.greatest(zero, siy1 - siy0 + 1)).otherwise(F.lit(0))
-    st = info.agg(
-        F.count(F.lit(1)).alias("_np"),
-        F.sum(F.when(F.col("_ri.rect"), 0).otherwise(1)).alias("_ng"),
-        F.sum(rect_rows).alias("_rr")).collect()[0]
-    stats = {"n_polys": int(st["_np"]),
-             "n_gen": int(st["_ng"] or 0),
-             "rect_rows": int(st["_rr"] or 0)}
     # all-rect side: skip the general union branch AT PLAN TIME; the
     # tag tells consumers the cover is pure JVM (its refine needs no UDF)
     if stats["n_gen"] == 0:
         rcov._geospark_pure_jvm = True
         rcov._geospark_cover_stats = stats
         return rcov
+    gen = (info.filter(~F.col("_ri.rect")).select(poly_id_col)
+           .join(polys_df.select(poly_id_col, geom_col), poly_id_col))
     par = polys_df.sparkSession.sparkContext.defaultParallelism
     gcov = gen.repartition(par).mapInPandas(
         fn, schema=_cover_schema(poly_id_col))
     out = rcov.unionByName(gcov)
     out._geospark_cover_stats = stats
     return out
+
+
+def distributed_polygon_cover(polys_df, res: int,
+                              poly_id_col: str = "zone_id",
+                              geom_col: str = "geom_wkb"):
+    """Covering computed ON EXECUTORS, in the cover schema: the driver
+    never collects geometry, so a million-polygon side scales out.
+
+    Two steps, one Python read of the side: ``_detect_and_stats`` runs
+    the vectorized detection pass (rectangle corners and envelope area
+    per polygon) into a lazy checkpoint and fills it with one stats
+    aggregation (polygon count, non-rect count, median envelope area,
+    rect cover rows), exposed as ``_geospark_cover_stats``;
+    ``_cover_from_info`` then builds the cover lazily from the frozen
+    info. Callers that pick the resolution (``spatial_join``,
+    ``spatial_join_polygons``) call the two steps themselves and take
+    the resolution from the same aggregation, so no side is read twice.
+
+    Two tiers (r5): axis-aligned rectangles — the typical LARGE polygon
+    side (parcels, tiles, boxes) — are covered with PURE JVM column
+    expressions (sequence + explode over the closed-intersect cell index
+    ranges, the same integer cell ids as cells.cell_encode); only the
+    non-rectangular residue pays the per-polygon Python covering
+    (mapInPandas, repartitioned to the full core budget). At sf1 (200k
+    boxes) the all-Python covering was 9.7 s of the join's 10.3 s.
+    Closed-intersect ranges match the Python covering's closed bbox
+    overlap, which poly_join's shared-boundary semantics relies on;
+    ``_full`` is the exact cell-inside-rect test (left/bottom closed,
+    right/top open, the convention of the rect refine)."""
+    info, res, stats = _detect_and_stats(polys_df, res, poly_id_col,
+                                         geom_col)
+    return _cover_from_info(polys_df, info, res, stats, poly_id_col,
+                            geom_col)
 
 
 def make_wkb_refine_udf():
@@ -484,10 +567,13 @@ def _polygon_side(polys_df, res: int | None, poly_id_col: str,
                     "spark.geospark.pip.maxDriverPolygons", "100000")):
                 polys = [(r[0], r[1]) for r in rows]
     if polys is None:
-        if res is None:
-            res = _pick_resolution_distributed(polys_df, geom_col)
-        return _Side(distributed_polygon_cover(polys_df, res, poly_id_col,
-                                               geom_col), res, None, None)
+        # one Python pass: the stats that fill the detection checkpoint
+        # also pick the resolution when ``res`` is None
+        info, res, stats = _detect_and_stats(polys_df, res, poly_id_col,
+                                             geom_col)
+        return _Side(_cover_from_info(polys_df, info, res, stats,
+                                      poly_id_col, geom_col),
+                     res, None, None)
     if res is None:
         res = pick_resolution(polys)
     # a collected side refines from the ring map (see _refine), so its
@@ -751,8 +837,9 @@ def spatial_join_polygons(left, right, *, res: int | None = None,
 
     Plan shape — both sides stay DataFrames end to end:
       1. cover BOTH sides into cells on executors
-         (distributed_polygon_cover — same machinery as the PIP join,
-         with per-cell full flags and rectangle corners);
+         (distributed_polygon_cover's two steps — same machinery as the
+         PIP join, with per-cell full flags and rectangle corners; each
+         side's one detection pass also picks its resolution);
       2. equi-join the covers on cell, dedup to candidate (l, r) pairs
          (one groupBy keyed by the pair);
       3. refine tiers: rect x rect pairs = pure-JVM closed interval
@@ -765,18 +852,22 @@ def spatial_join_polygons(left, right, *, res: int | None = None,
     dedup, both equi-keyed; AQE skew-join covers hot cells."""
     from pyspark.sql import functions as F
 
-    if res is None:
-        res = min(_pick_resolution_distributed(left, l_geom),
-                  _pick_resolution_distributed(right, r_geom))
-    # the two cover builds each run a small detect+stats job: submit them
-    # from driver threads so the scheduler overlaps them
+    # each side is read by Python once: one detection pass whose stats
+    # aggregation also yields the side's resolution pick. The two run
+    # from driver threads (carrying the caller's job group) so the
+    # scheduler overlaps them; the covers use the coarser of the two
+    # picks (rect_rows is never read here)
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.util import inheritable_thread_target
+    detect = inheritable_thread_target(left.sparkSession)(_detect_and_stats)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        fl = pool.submit(distributed_polygon_cover, left, res,
-                         l_id, l_geom)
-        fr = pool.submit(distributed_polygon_cover, right, res,
-                         r_id, r_geom)
-        lcov_raw, rcov_raw = fl.result(), fr.result()
+        fl = pool.submit(detect, left, res, l_id, l_geom, rect_rows=False)
+        fr = pool.submit(detect, right, res, r_id, r_geom, rect_rows=False)
+        (linfo, lres, lst), (rinfo, rres, rst) = fl.result(), fr.result()
+    res = min(lres, rres)
+    lcov_raw = _cover_from_info(left, linfo, res, lst, l_id, l_geom)
+    rcov_raw = _cover_from_info(right, rinfo, res, rst, r_id, r_geom)
     def sided(cov, id_col, p):  # _full -> _lf, _bx0 -> _lx0, ...
         return cov.select(id_col, "_cell", *(
             F.col(c).alias(f"_{p}{a}") for c, a in (

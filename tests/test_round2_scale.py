@@ -182,6 +182,189 @@ def test_pick_resolution_distributed_no_collect(spark):
 
 
 # ---------------------------------------------------------------------------
+# one Python pass per distributed polygon side: the cover's detection
+# pass also picks the resolution
+# ---------------------------------------------------------------------------
+
+def _star_wkb(cx, cy, r_in, r_out, k=7):
+    from geospark.kernels.geom import parse_wkt
+    from geospark.kernels.wkb import write_wkb
+    t = np.linspace(0.0, 2.0 * np.pi, 2 * k, endpoint=False)
+    r = np.where(np.arange(2 * k) % 2 == 0, r_out, r_in)
+    xs, ys = cx + r * np.cos(t), cy + r * np.sin(t)
+    ring = ", ".join(f"{x!r} {y!r}" for x, y in zip(xs, ys))
+    return write_wkb(parse_wkt(f"POLYGON (({ring}, {xs[0]!r} {ys[0]!r}))"))
+
+
+def _box_wkb(x, y, w, h):
+    from geospark.kernels.geom import parse_wkt
+    from geospark.kernels.wkb import write_wkb
+    return write_wkb(parse_wkt(
+        f"POLYGON (({x} {y}, {x + w} {y}, {x + w} {y + h}, "
+        f"{x} {y + h}, {x} {y}))"))
+
+
+def _mixed_side_rows(off: int = 0):
+    """(id, wkb): 5 concave stars (envelope area 4), 4 rectangles (20),
+    one multipolygon and one big-endian polygon (300 each), one EMPTY
+    polygon, one NULL. The 11 envelopes have median 20 (res 9); a pass
+    that lost the two general-codec rows would see median 4 (res 10)."""
+    import struct
+
+    from geospark.kernels.geom import parse_wkt
+    from geospark.kernels.wkb import write_wkb
+    rows = [(off + i, _star_wkb(-60.0 + 20 * i, 10.0, 0.5, 1.0))
+            for i in range(5)]
+    rows += [(off + 10 + i, _box_wkb(-50 + 25 * i, -30, 5, 4))
+             for i in range(4)]
+    rows.append((off + 20, write_wkb(parse_wkt(
+        "MULTIPOLYGON (((100 40, 110 40, 105 45, 100 40)), "
+        "((112 55, 120 55, 116 70, 112 55)))"))))
+    ring = [(-130.0, -50.0), (-110.0, -50.0), (-120.0, -35.0),
+            (-130.0, -50.0)]
+    rows.append((off + 21, struct.pack(">BII", 0, 3, 1)
+                 + struct.pack(">I", len(ring))
+                 + b"".join(struct.pack(">dd", x, y) for x, y in ring)))
+    rows.append((off + 22, write_wkb(parse_wkt("POLYGON EMPTY"))))
+    rows.append((off + 23, None))
+    return rows
+
+
+def _mixed_points(spark, rows):
+    """Points scattered over (and around) every polygon's envelope."""
+    from geospark.kernels.ops import geom_envelope
+    from geospark.kernels.wkb import parse_wkb
+    rng = np.random.default_rng(11)
+    pts = []
+    for _, w in rows:
+        g = parse_wkb(w) if w is not None else None
+        if g is None or g.is_empty:
+            continue
+        x0, y0, x1, y1 = geom_envelope(g)
+        for lon, lat in zip(rng.uniform(x0 - 1, x1 + 1, 40),
+                            rng.uniform(y0 - 1, y1 + 1, 40)):
+            pts.append((len(pts), float(lat), float(lon)))
+    return spark.createDataFrame(pts, "pid long, lat double, lon double")
+
+
+def test_envelope_areas_match_st_envelope():
+    """The detection pass's envelope areas equal st_envelope's (batch
+    kernel), with NULL/EMPTY reported as 0."""
+    import pandas as pd
+
+    from geospark.functions.geometry import (_series_to_wkb_buffers,
+                                             _st_envelope_batch)
+    from geospark.kernels.wkb import parse_polygon_wkb_buffer
+    from geospark.operators.joins import _envelope_areas
+    s = pd.Series([w for _, w in _mixed_side_rows()], dtype=object)
+    data, offs, val = _series_to_wkb_buffers(s)
+    got = _envelope_areas(s, parse_polygon_wkb_buffer(data, offs, val), val)
+    e = _st_envelope_batch(s)
+    want = ((e["xmax"] - e["xmin"]) * (e["ymax"] - e["ymin"])).to_numpy()
+    assert np.array_equal(got, np.nan_to_num(want, nan=0.0))
+    assert (got > 0).sum() == 11
+
+
+def test_resolution_pick_parity_mixed_side(spark, monkeypatch):
+    """_pick_resolution_distributed, the resolution spatial_join
+    (distributed=True) and spatial_join_polygons cover with, and
+    pick_resolution over the collected rows agree on a side mixing
+    stars, rectangles, a multipolygon, a big-endian polygon, EMPTY and
+    NULL; both joins equal brute force."""
+    from geospark.kernels.ops import geom_intersects, point_in_rings
+    from geospark.kernels.wkb import parse_wkb
+    from geospark.operators import joins
+    rows = _mixed_side_rows()
+    side = spark.createDataFrame(rows, "zone_id long, geom_wkb binary")
+    res_c = joins.pick_resolution(rows)
+    assert res_c == 9
+    assert joins._pick_resolution_distributed(side, "geom_wkb") == res_c
+
+    used = []
+    cover_from_info = joins._cover_from_info
+
+    def spy(polys_df, info, res, *a):
+        used.append(res)
+        return cover_from_info(polys_df, info, res, *a)
+
+    monkeypatch.setattr(joins, "_cover_from_info", spy)
+    pts = _mixed_points(spark, rows)
+    got = {(r.pid, r.zone_id) for r in joins.spatial_join(
+        pts, side, distributed=True).select("pid", "zone_id").collect()}
+    assert used == [res_c]
+    want = set()
+    pdf = pts.toPandas()
+    for zid, w in rows:
+        g = parse_wkb(w) if w is not None else None
+        hit = np.zeros(len(pdf), dtype=bool)
+        for rings in joins._geom_rings(g) if g is not None else []:
+            hit |= point_in_rings(pdf["lon"].to_numpy(),
+                                  pdf["lat"].to_numpy(), rings)
+        want |= {(int(p), zid) for p in pdf["pid"][hit]}
+    assert got == want and {z for _, z in want} >= {0, 10, 20, 21}
+
+    rrows = _mixed_side_rows(off=100) + [
+        (200, _box_wkb(-62, 8, 25, 3)), (201, _box_wkb(95, 38, 30, 30)),
+        (202, _star_wkb(-125.0, -45.0, 3.0, 8.0))]
+    left = side.withColumnRenamed("zone_id", "l_id")
+    right = spark.createDataFrame(rrows, "r_id long, geom_wkb binary")
+    used.clear()
+    got = {(r.l_id, r.r_id) for r in
+           joins.spatial_join_polygons(left, right).collect()}
+    res_r = joins._pick_resolution_distributed(right, "geom_wkb")
+    assert res_r == joins.pick_resolution(rrows)
+    assert used == [min(res_c, res_r)] * 2
+    want = {(lid, rid) for lid, lw in rows for rid, rw in rrows
+            if lw is not None and rw is not None
+            and geom_intersects(parse_wkb(lw), parse_wkb(rw))}
+    assert got == want and len(want) > 11
+
+
+def _plan_jobs(sc, fn):
+    """(jobs in a fresh job group, jobs outside any group) that ``fn``
+    submits: plan building only, no action on its result."""
+    import uuid
+    tracker = sc.statusTracker()
+    group = f"plan-jobs-{uuid.uuid4().hex}"
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return (len(tracker.getJobIdsForGroup(group)),
+            len(set(tracker.getJobIdsForGroup(None)) - before))
+
+
+def test_distributed_sides_read_once_job_counts(spark):
+    """Plan-time jobs per distributed polygon side: the detection pass
+    and its stats aggregation (a Python map job and a result job), plus
+    one single-task JVM job for the rect cover rows when spatial_join
+    picks the resolution. A resolution pick that re-read the side would
+    add a Python job and a result job per side. spatial_join_polygons'
+    two per-side passes run from driver threads that keep the caller's
+    job group."""
+    from geospark.operators.joins import spatial_join, spatial_join_polygons
+    sc = spark.sparkContext
+    side = spark.createDataFrame(_mixed_side_rows(),
+                                 "zone_id long, geom_wkb binary")
+    pts = _mixed_points(spark, _mixed_side_rows())
+    assert _plan_jobs(sc, lambda: spatial_join(
+        pts, side, distributed=True)) == (3, 0)
+    assert _plan_jobs(sc, lambda: spatial_join(
+        pts, side, res=9, distributed=True)) == (2, 0)
+    boxes = [(i, _box_wkb(-170 + 7 * i, -20 + (i % 5), 3, 2))
+             for i in range(40)]
+    left = spark.createDataFrame(boxes, "l_id long, geom_wkb binary")
+    right = spark.createDataFrame([(i, _box_wkb(-169 + 7 * i, -19, 4, 4))
+                                   for i in range(40)],
+                                  "r_id long, geom_wkb binary")
+    assert _plan_jobs(sc, lambda: spatial_join_polygons(
+        left, right)) == (4, 0)
+
+
+# ---------------------------------------------------------------------------
 # lon-wrapped kNN metric
 # ---------------------------------------------------------------------------
 
